@@ -29,9 +29,16 @@ object FeaturePipeline {
 
   /** Days since the dataset-min date (P5; train.py:19, run_pipeline.py:47).
     * NOTE reference quirk §2.7-3: the origin is recomputed from the
-    * CURRENT dataset at transform time; pass `fixedOrigin` to pin it. */
+    * CURRENT dataset at transform time; pass `fixedOrigin` to pin it.
+    * Null on a dataset without dates (no row then needs it). */
   def dateOrigin(df: DataFrame): Date =
     df.agg(min("Date")).head().getDate(0)
+
+  /** The origin enters the plan as a [[PlanConstant]], not a literal: it
+    * changes with every scored upload, and a literal would make each
+    * upload's generated code new. */
+  private def daysSince(origin: Date): Column =
+    datediff(col("Date"), PlanConstant(Option(origin).map(_.toLocalDate).orNull)).cast("double")
 
   private def guardStd(s: Double): Double = if (s == 0.0 || s.isNaN) 1.0 else s
 
@@ -39,7 +46,7 @@ object FeaturePipeline {
     val cats = df.select("SubsidyType").distinct().collect()
       .map(_.getString(0)).sorted.toSeq
     val origin = dateOrigin(df)
-    val days = datediff(col("Date"), lit(origin)).cast("double")
+    val days = daysSince(origin)
     val r: Row = df.agg(
       avg(col("ClaimAmount")), stddev_pop(col("ClaimAmount")),
       avg(days), stddev_pop(days)).head()
@@ -49,11 +56,12 @@ object FeaturePipeline {
   }
 
   /** Appends `features: array<double>` = [amount_z, days_z, onehot…].
-    * Pure codegen'd expressions — no UDF, no MLlib vector boxing. */
+    * Codegen'd expressions — no per-row model UDF, no MLlib vector
+    * boxing. Without `fixedOrigin` this runs one action for the
+    * dataset's origin; a caller that already has it passes it here. */
   def transform(df: DataFrame, p: FeatureParams,
                 fixedOrigin: Option[Date] = None): DataFrame = {
-    val origin = fixedOrigin.getOrElse(dateOrigin(df))
-    val days = datediff(col("Date"), lit(origin)).cast("double")
+    val days = daysSince(fixedOrigin.getOrElse(dateOrigin(df)))
     val amountZ = (col("ClaimAmount") - lit(p.amountMean)) / lit(p.amountStd)
     val daysZ = (days - lit(p.daysMean)) / lit(p.daysStd)
     val oneHot: Seq[Column] =

@@ -1,14 +1,23 @@
 package graft.fraud
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ml.{MLP, Trainer}
 
 /** The hybrid rule+ML pipeline end-to-end (reference: scripts/
-  * run_pipeline.py:11-101) as ONE lazy Spark plan with three tiny scalar
-  * actions (p99, feature stats / date origin, error mean+2σ) and a final
-  * write.
+  * run_pipeline.py:11-101) as ONE lazy Spark plan with two tiny scalar
+  * actions — p99 and date origin fused into one aggregate over the input,
+  * then the error mean+2σ — and a final write.
+  *
+  * Scoring a small upload is mostly fixed cost per Spark job and per
+  * compiled class, so [[scoreWithColumns]] keeps both down:
+  *  - the three per-upload values enter the plan as [[PlanConstant]]s,
+  *    not literals, so every upload reuses the classes codegen compiled
+  *    for the previous one (and their JIT-compiled code);
+  *  - in parity mode the input is parsed once (a lazy local checkpoint,
+  *    filled by the first aggregate) and input order is restored by one
+  *    shuffle to a single partition plus a partition-local sort.
   *
   * Deliberate divergence from the reference (documented, SURVEY §2.7):
   *  - ReconstructionError stays in the row lineage, so it is attached to
@@ -80,33 +89,51 @@ object FraudPipeline {
 
   /** [[score]] with extra input columns carried through to the output —
     * e.g. the eval corpus's FraudLabel (never a reference feature, so it
-    * must bypass the feature/rule path untouched). */
+    * must bypass the feature/rule path untouched). An input without rows
+    * gives an output without rows.
+    *
+    * `preserveInputOrder` is golden/parity mode, for small files: the
+    * parsed input is kept once in executor storage (released by Spark's
+    * context cleaner once the result is unreachable) instead of being
+    * re-read by each of the three passes, and the output is gathered
+    * into one partition. At scale pass `false`: each pass then re-reads
+    * the input, since keeping a 100 TB table spills and leaks executor
+    * storage across invocations (r1 advice), and the output stays
+    * partitioned. */
   def scoreWithColumns(spark: SparkSession, claims: DataFrame, model: FraudModel,
             passthrough: Seq[String],
             exactQuantile: Boolean = true,
             preserveInputOrder: Boolean = true): DataFrame = {
-    val ruled = RuleEngine.withRuleTags(claims, exactQuantile)
-    val feat = FeaturePipeline.transform(ruled, model.params)
+    val rowed = RuleEngine.withRowId(claims)
+    val input = if (preserveInputOrder) rowed.localCheckpoint(eager = false) else rowed
+    // p99 and the date origin depend only on the input: one action for both
+    val stats = input.agg(RuleEngine.p99Column(exactQuantile), min("Date")).head()
+    val ruled = RuleEngine.withRuleTagsAt(input, RuleEngine.doubleOrNaN(stats, 0))
+    val feat = FeaturePipeline.transform(ruled, model.params, fixedOrigin = Some(stats.getDate(1)))
     // The threshold pass (M7) recomputes the linear scoring plan rather
-    // than caching it: the score path is shuffle-free per row, so one
-    // extra pass costs a scan, while caching a 100 TB scored table
-    // spills and leaks executor storage across invocations (r1 advice).
+    // than caching it; the rule windows are pruned from it, since the
+    // error does not depend on the tags.
     val scored = withReconstructionError(spark, feat, model.net)
-    val r: Row = scored.agg(
-      avg("ReconstructionError"), stddev_pop("ReconstructionError")).head()
-    val thr = r.getDouble(0) + 2.0 * r.getDouble(1) // M7: mean + 2σ (ddof=0)
+    val thr = mlThreshold(scored)
     val combined = scored
       .withColumn("MLFraud",
-        when(col("ReconstructionError") > lit(thr), "Suspicious").otherwise("Normal"))
+        when(col("ReconstructionError") > PlanConstant(thr), "Suspicious").otherwise("Normal"))
       .withColumn("FraudType", combineFraudType)
-    // pandas-index order parity is a global sort — golden/parity mode
-    // only; at scale pass preserveInputOrder = false
-    val ordered = if (preserveInputOrder) combined.orderBy("_row_id") else combined
+    // pandas-index order parity: one partition sorted by row id, without
+    // the sampling job and range shuffle of a global sort
+    val ordered =
+      if (preserveInputOrder) combined.repartition(1).sortWithinPartitions("_row_id") else combined
     val outCols = Seq(
       col("Name"), col("Aadhaar"), col("ClaimAmount"), col("SubsidyType"),
       date_format(col("Date"), "yyyy-MM-dd").as("Date"),
       col("ReconstructionError"), col("FraudType")) ++ passthrough.map(col)
     ordered.select(outCols: _*)
+  }
+
+  /** M7: mean + 2σ (ddof=0) of `ReconstructionError`; NaN without rows. */
+  private def mlThreshold(scored: DataFrame): Double = {
+    val r = scored.agg(avg("ReconstructionError"), stddev_pop("ReconstructionError")).head()
+    RuleEngine.doubleOrNaN(r, 0) + 2.0 * RuleEngine.doubleOrNaN(r, 1)
   }
 
   /** train-then-score on the same table — the reference's self-scoring
