@@ -15,7 +15,25 @@ import org.apache.spark.sql.SparkSession
   * with code, data and output bit-identical (q166 at sf1: 25.0 s at
   * width 32 vs 85.7 s at width 4, measured back-to-back on an idle
   * machine, r18). Deriving the default from the machine removes the
-  * env-dependent measurement mode entirely. */
+  * env-dependent measurement mode entirely.
+  *
+  * Two streaming settings make one arrival cost one micro-batch:
+  *  - `noDataMicroBatches.enabled=false`: no trailing batch without data
+  *    after each data batch. That batch only advances the watermark; on
+  *    the fraud twins it emits nothing and cost about a third of a
+  *    5×10⁴-row batch. State expiry moves to the next data batch, which
+  *    also times keys out. For an Append-mode twin that emits on the
+  *    watermark (a closed session or window, a ripe as-of row), the row
+  *    comes out with the next data batch instead of right after the
+  *    batch that closed it.
+  *  - `maxBatchesToRetainInMemory=1`: the state store keeps one version
+  *    in memory, not two, so the previous batch's state map is released
+  *    when a batch commits. Only a retried batch reloads its state from
+  *    the checkpoint's delta files.
+  * Batch queries read neither. A streaming query reads them from the
+  * session clone it takes in `start()`, so a caller that needs the
+  * trailing batch passes `extra = Map(
+  * "spark.sql.streaming.noDataMicroBatches.enabled" -> "true")`. */
 object Sessions {
   def local(defaultCpus: String =
               String.valueOf(Runtime.getRuntime.availableProcessors),
@@ -60,6 +78,8 @@ object Sessions {
       // with 100 TB shuffles re-measures with its own data via the env.
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
+      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      .config("spark.sql.streaming.maxBatchesToRetainInMemory", "1")
     val s = extra.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -26,11 +26,21 @@ import graft.fraud.Claims
   * dir and union the tag columns downstream; this twin implements the
   * Aadhaar-keyed rules only.
   *
-  * Scale: state lives per Aadhaar key (a set of names + last claim
-  * date, bytes per key), partitioned by the stream's groupBy key —
-  * no driver state, no global shuffle beyond the keyed exchange every
-  * stateful op needs. A watermark + event-time timeout expires keys
-  * idle past the lateness horizon, bounding the state store.
+  * Scale: state lives per key and is bounded — the first name (or
+  * Aadhaar) seen, a "second distinct value seen" bit and the last claim
+  * time — partitioned by the stream's groupBy key: no driver state, no
+  * global shuffle beyond the keyed exchange every stateful op needs. A
+  * watermark + event-time timeout expires keys idle past the lateness
+  * horizon, bounding the state store. Without no-data micro-batches
+  * (`graft.Sessions.local`) a key expires at the first data batch after
+  * the watermark passes its horizon, one batch later than with them;
+  * the tags do not change, because a key's state is read as absent once
+  * the watermark has passed its horizon, whether or not Spark has timed
+  * it out yet.
+  *
+  * The state schema changed from a set of names (Aadhaars) to the flat
+  * form: a checkpoint written with the set-shaped state cannot be
+  * restarted by this code; start such a query from a new checkpoint.
   */
 object StreamingFraud {
 
@@ -44,53 +54,69 @@ object StreamingFraud {
       Name: String, Aadhaar: Long, ClaimAmount: Double,
       SubsidyType: String, Date: java.sql.Timestamp, RuleFraud: String)
 
-  /** Per-Aadhaar state: distinct claimant names seen + last claim date
-    * (epoch day). */
-  final case class AadhaarState(names: Set[String], lastEpochDay: Long)
+  /** Per-Aadhaar state: the first claimant name (may be NULL), whether a
+    * different name (NULL counts as a name) has been seen since, and the
+    * last claim date (epoch day). Exists once the key has a claim. */
+  final case class AadhaarState(firstName: String, manyNames: Boolean, lastEpochDay: Long)
 
   val StateRetention = "30 days"
+  private val DayMs = 86400000L
+  private val RetentionMs = 30L * DayMs
 
-  private def tagBatch(
-      aadhaar: Long,
-      rows: Iterator[ClaimEvent],
-      state: GroupState[AadhaarState],
-      highClaimThreshold: Double): Iterator[TaggedClaim] = {
+  /** One key's turn in a micro-batch of a fraud twin. A timed-out key
+    * is dropped and emits nothing. Otherwise `tag` folds the key's claims
+    * from its state — None before its first claim, and None once the
+    * watermark has passed its last claim (`lastMs`) + retention, since
+    * Spark times such a key out only in a batch without data for it —
+    * and the new state expires once the watermark passes that horizon;
+    * the event-time base (not the current watermark, which is 0 on the
+    * first batch) keeps fresh state from timing out immediately. */
+  private def expiringKey[S](state: GroupState[S], lastMs: S => Long)(
+      tag: Option[S] => (Option[S], Seq[TaggedClaim])): Iterator[TaggedClaim] =
     if (state.hasTimedOut) {
       state.remove()
       Iterator.empty
     } else {
-      var st = state.getOption.getOrElse(AadhaarState(Set.empty, Long.MinValue))
-      // event-time order within the batch (files may interleave keys)
-      val out = rows.toArray.sortBy(_.Date.getTime).map { c =>
-        val epochDay = c.Date.getTime / 86400000L
-        val names = st.names + c.Name
-        val dup  = names.size > 1
-        // Late-event semantics: state tracks only the max epochDay seen, so
-        // a cross-batch out-of-order claim (still inside the watermark) has
-        // no recorded predecessor — it is tagged against the max-seen day
-        // ONLY when it is not older than it (a negative gap would otherwise
-        // satisfy <= 7 vacuously). Older stragglers get no FrequentClaims
-        // tag; the batch pipeline (retrospective, fully sorted) is the
-        // authority for exact gaps.
-        val freq = st.lastEpochDay != Long.MinValue &&
-          epochDay >= st.lastEpochDay && epochDay - st.lastEpochDay <= 7
-        val high = c.ClaimAmount > highClaimThreshold
-        st = AadhaarState(names, math.max(st.lastEpochDay, epochDay))
-        val tags = (if (dup) "DuplicateAadhaar;" else "") +
-          (if (high) "HighClaimAmount;" else "") +
-          (if (freq) "FrequentClaims;" else "")
-        TaggedClaim(c.Name, aadhaar, c.ClaimAmount, c.SubsidyType, c.Date,
-          if (tags.isEmpty) "Normal" else tags)
+      val wm = state.getCurrentWatermarkMs()
+      val (st, out) = tag(state.getOption.filter(s => lastMs(s) + RetentionMs >= wm))
+      st.foreach { s =>
+        state.update(s)
+        state.setTimeoutTimestamp(math.max(wm + 1, lastMs(s) + RetentionMs))
       }
-      state.update(st)
-      // expire once the watermark passes lastDate + retention; the
-      // event-time base (not the current watermark, which is 0 on the
-      // first batch) keeps fresh state from timing out immediately
-      state.setTimeoutTimestamp(math.max(
-        state.getCurrentWatermarkMs() + 1,
-        st.lastEpochDay * 86400000L + 30L * 86400000L))
       out.iterator
     }
+
+  /** The Aadhaar-keyed rules over one batch of a key's claims, in event
+    * time order, from the key's state before the batch (None: no claim
+    * yet): the state after the batch and each claim's tags. */
+  private[streaming] def tagClaims(
+      aadhaar: Long,
+      prev: Option[AadhaarState],
+      rows: Seq[ClaimEvent],
+      highClaimThreshold: Double): (Option[AadhaarState], Seq[TaggedClaim]) = {
+    var st = prev
+    val out = rows.sortBy(_.Date.getTime).map { c =>
+      val epochDay = c.Date.getTime / DayMs
+      // Late-event semantics: state tracks only the max epochDay seen, so
+      // a cross-batch out-of-order claim (still inside the watermark) has
+      // no recorded predecessor — it is tagged against the max-seen day
+      // ONLY when it is not older than it (a negative gap would otherwise
+      // satisfy <= 7 vacuously). Older stragglers get no FrequentClaims
+      // tag; the batch pipeline (retrospective, fully sorted) is the
+      // authority for exact gaps.
+      val freq = st.exists(s => epochDay >= s.lastEpochDay && epochDay - s.lastEpochDay <= 7)
+      val next = st.fold(AadhaarState(c.Name, manyNames = false, epochDay))(s =>
+        AadhaarState(s.firstName, s.manyNames || s.firstName != c.Name,
+          math.max(s.lastEpochDay, epochDay)))
+      st = Some(next)
+      val high = c.ClaimAmount > highClaimThreshold
+      val tags = (if (next.manyNames) "DuplicateAadhaar;" else "") +
+        (if (high) "HighClaimAmount;" else "") +
+        (if (freq) "FrequentClaims;" else "")
+      TaggedClaim(c.Name, aadhaar, c.ClaimAmount, c.SubsidyType, c.Date,
+        if (tags.isEmpty) "Normal" else tags)
+    }
+    (st, out)
   }
 
   /** Core transform: a (streaming or batch) claims Dataset → per-claim
@@ -103,11 +129,34 @@ object StreamingFraud {
       .withWatermark("Date", StateRetention)
       .groupByKey(_.Aadhaar)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (k: Long, rows: Iterator[ClaimEvent], st: GroupState[AadhaarState]) =>
-          tagBatch(k, rows, st, highClaimThreshold))
+        (k: Long, rows: Iterator[ClaimEvent], state: GroupState[AadhaarState]) =>
+          expiringKey(state, (s: AadhaarState) => s.lastEpochDay * DayMs)(
+            tagClaims(k, _, rows.toSeq, highClaimThreshold)))
   }
 
-  final case class NameState(aadhaars: Set[Long])
+  /** Per-Name state: the first Aadhaar, whether a different Aadhaar has
+    * been seen since, and the last claim time (epoch ms). */
+  final case class NameState(firstAadhaar: Long, manyAadhaars: Boolean, lastMs: Long)
+
+  /** MultiAadhaar over one batch of a name's claims, in event time
+    * order, from the name's state before the batch (None: no claim
+    * yet): the state after the batch and each claim's tags. */
+  private[streaming] def tagNameClaims(
+      name: String,
+      prev: Option[NameState],
+      rows: Seq[ClaimEvent]): (Option[NameState], Seq[TaggedClaim]) = {
+    var st = prev
+    val out = rows.sortBy(_.Date.getTime).map { c =>
+      val ms = c.Date.getTime
+      val next = st.fold(NameState(c.Aadhaar, manyAadhaars = false, ms))(s =>
+        NameState(s.firstAadhaar, s.manyAadhaars || s.firstAadhaar != c.Aadhaar,
+          math.max(s.lastMs, ms)))
+      st = Some(next)
+      TaggedClaim(name, c.Aadhaar, c.ClaimAmount, c.SubsidyType, c.Date,
+        if (next.manyAadhaars) "MultiAadhaar;" else "Normal")
+    }
+    (st, out)
+  }
 
   /** The MIRROR rule stream: keyed by Name, tagging MultiAadhaar (> 1
     * distinct Aadhaar seen so far for the claimant name). Run as a
@@ -121,21 +170,7 @@ object StreamingFraud {
       .groupByKey(_.Name)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
         (name: String, rows: Iterator[ClaimEvent], state: GroupState[NameState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(NameState(Set.empty))
-            var maxMs = Long.MinValue
-            val out = rows.toArray.sortBy(_.Date.getTime).map { c =>
-              st = NameState(st.aadhaars + c.Aadhaar)
-              maxMs = math.max(maxMs, c.Date.getTime)
-              TaggedClaim(name, c.Aadhaar, c.ClaimAmount, c.SubsidyType, c.Date,
-                if (st.aadhaars.size > 1) "MultiAadhaar;" else "Normal")
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(math.max(
-              state.getCurrentWatermarkMs() + 1, maxMs + 30L * 86400000L))
-            out.iterator
-          })
+          expiringKey(state, (s: NameState) => s.lastMs)(tagNameClaims(name, _, rows.toSeq)))
   }
 
   /** Completes the E1 twin: ML-score the rule-tagged stream with a

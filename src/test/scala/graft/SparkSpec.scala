@@ -3,7 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for every suite (Spark startup dominates
-  * test wall-clock; suites must not call spark.stop()). */
+  * test wall-clock; suites must not call spark.stop()).
+  *
+  * It keeps Spark's streaming defaults on purpose, unlike
+  * `graft.Sessions.local`: no-data micro-batches stay on and two state
+  * versions stay in memory, so the streaming twins' specs pin the
+  * behaviour a caller gets from a plain session. A spec that needs
+  * another streaming setting scopes it to one query (set it, `start()`,
+  * restore it), since every suite shares this session. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()

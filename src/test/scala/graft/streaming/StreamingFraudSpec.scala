@@ -1241,6 +1241,54 @@ class StreamingFraudSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  test("scoreStream with a model trained on a claims table built here: rules win over ML, Suspicious above the fitted threshold") {
+    val spark = SparkSpec.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val rng = new scala.util.Random(5)
+    val subsidies = Seq("Education", "Farming", "Housing", "LPG")
+    val start = java.time.LocalDate.of(2024, 12, 1)
+    val train = spark.createDataFrame(
+      java.util.Arrays.asList(Seq.tabulate(200)(i => org.apache.spark.sql.Row(
+        s"n$i", 100000L + i, math.rint(rng.nextDouble() * 5000000) / 100,
+        subsidies(rng.nextInt(4)), java.sql.Date.valueOf(start.plusDays(rng.nextInt(120))))): _*),
+      graft.fraud.Claims.schema)
+    val model = graft.fraud.FraudPipeline.train(spark, train, graft.ml.Trainer.Config(epochs = 5))
+    // the fitted threshold: mean + 2σ (ddof=0) of the training errors
+    val trainErr = graft.fraud.FraudPipeline.withReconstructionError(spark,
+      graft.fraud.FeaturePipeline.transform(train, model.params,
+        fixedOrigin = Some(model.params.trainDateOrigin)), model.net)
+      .select("ReconstructionError").as[Double].collect()
+    val mean = trainErr.sum / trainErr.length
+    val thr = mean + 2 * math.sqrt(trainErr.map(e => (e - mean) * (e - mean)).sum / trainErr.length)
+
+    val input = MemoryStream[ClaimEvent]
+    val tagged = StreamingFraud.withRuleTags(input.toDS(), highClaimThreshold = 450000.0)
+    val query = StreamingFraud.scoreStream(tagged, model, mlThreshold = thr)
+      .writeStream.format("memory").queryName("scored_hermetic")
+      .outputMode("append").start()
+    try {
+      // far outside the training amounts (at most 50 000): one above the
+      // rule's threshold, one below it; the rest look like training claims
+      input.addData(
+        ClaimEvent("Asha", 1L, 500000.0, "LPG", ts("2025-01-15")) +:
+        ClaimEvent("Bala", 2L, 400000.0, "Housing", ts("2025-01-15")) +:
+        Seq.tabulate(20)(i => ClaimEvent(s"m$i", 10L + i, 1000.0 + 2000.0 * i,
+          subsidies(i % 4), ts(start.plusDays(5L * i).toString))): _*)
+      query.processAllAvailable()
+      val rows = spark.sql("select Name, ReconstructionError, FraudType from scored_hermetic")
+        .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getString(2))).toMap
+      assert(rows.size === 22)
+      assert(rows.values.forall { case (e, _) => e > 0 && !e.isNaN && !e.isInfinite })
+      assert(rows("Asha")._1 > thr && rows("Asha")._2 === "HighClaimAmount;") // rule wins
+      assert(rows("Bala")._1 > thr && rows("Bala")._2 === "Suspicious")
+      (rows - "Asha").values.foreach { case (e, t) =>
+        assert(t === (if (e > thr) "Suspicious" else "Normal"), s"error $e, threshold $thr")
+      }
+      assert(rows.values.count(_._2 == "Normal") > 0)
+    } finally query.stop()
+  }
+
   test("streaming incremental dedup: 2 micro-batches match the batch q71 verdicts") {
     val spark = SparkSpec.spark
     import spark.implicits._
