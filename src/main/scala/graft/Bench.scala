@@ -57,57 +57,21 @@ object Bench {
     // One-time index-build cost, timed SEPARATELY from the probes:
     // q75/q78 exist to amortize the build across nightly runs, so their
     // per-query numbers must reflect the probe alone (VERDICT r7 item
-    // 8). Any existing persisted index for this snapshot is removed
-    // first so the build is genuinely timed — the builds then leave
-    // catalog entries behind, making the timed q75/q78 runs pure
-    // probes. BENCH.json carries the split as "index_build".
-    def timeIndexBuild(subdir: String, build: () => Unit): Double = {
-      val loc = graft.ops.DurableIndex.root.resolve(subdir)
-      if (Files.exists(loc))
-        Files.walk(loc)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.delete(p))
-      val t0 = System.nanoTime()
-      build()
-      (System.nanoTime() - t0) / 1e9
-    }
+    // 8). Each timed index's existing files and catalog tables for this
+    // snapshot are removed first so the build is genuinely timed — the
+    // builds then leave catalog entries behind, making the timed
+    // q75/q78 runs pure probes. BENCH.json carries the split as
+    // "index_build", one key per spec that names one.
     // SPARK_GRAFT_BENCH_SKIP_INDEX=1 skips the fresh index builds —
     // for BENCH_ONLY subset probes of queries that touch no durable
     // index (an index-needing query selected under the flag still
     // works: DurableIndex build-once fires inside its timing).
     val skipIndex = sys.env.get("SPARK_GRAFT_BENCH_SKIP_INDEX").contains("1")
-    val indexBuilds = if (skipIndex) Seq.empty[(String, Double)] else Seq(
-      "dedup_corpus" -> timeIndexBuild(
-        "dedup-" + graft.ops.DurableIndex.snapshotTag(sfDir, "documents.parquet"),
-        () => { graft.dedup.DedupQueries.corpusIndex(spark, sfDir); () }),
-      "ivf" -> timeIndexBuild(
-        "ivf3-" + graft.ops.DurableIndex.snapshotTag(sfDir, "embeddings.parquet"),
-        () => { graft.sim.SimilarityQueries.ivfIndex(spark, sfDir); () }),
-      "span_grams" -> timeIndexBuild(
-        "spangrams-" + graft.ops.DurableIndex.snapshotTag(sfDir, "documents.parquet"),
-        () => { graft.text.Scrub.spanGramIndex(spark, sfDir); () }),
-      "ivf_append" -> timeIndexBuild(
-        "ivfapp-" + graft.ops.DurableIndex.snapshotTag(sfDir, "embeddings.parquet"),
-        () => { graft.sim.SimilarityQueries.ivfAppendedIndex(spark, sfDir); () }),
-      "cluster_labels" -> timeIndexBuild(
-        "clusters-" + graft.ops.DurableIndex.snapshotTag(sfDir, "documents.parquet"),
-        () => { graft.dedup.DedupQueries.clusterAssignmentTable(spark, sfDir); () }),
-      "kmeans_centroids" -> timeIndexBuild(
-        s"kmeans${graft.sim.KMeans.Iters}-" +
-          graft.ops.DurableIndex.snapshotTag(sfDir, "embeddings.parquet"),
-        () => { graft.sim.KMeans.centroidsTable(spark, sfDir); () }),
-      "dedup_pairs" -> timeIndexBuild(
-        "pairs-" + graft.ops.DurableIndex.snapshotTag(sfDir, "documents.parquet"),
-        () => { graft.dedup.DedupQueries.verifiedPairsTable(spark, sfDir); () }),
-      "semantic_drops" -> timeIndexBuild(
-        "semdrops-" + graft.ops.DurableIndex.snapshotTag(sfDir, "embeddings.parquet"),
-        () => { graft.sim.SimilarityQueries.semanticDropsTable(spark, sfDir); () }),
-      "jl_ivf" -> timeIndexBuild(
-        "jlivf-" + graft.ops.DurableIndex.snapshotTag(sfDir, "embeddings.parquet"),
-        () => { graft.sim.JlIvf.jlIvfIndex(spark, sfDir); () }),
-      "rrf_candidates" -> timeIndexBuild(
-        "rrfcand2-" + graft.ops.DurableIndex.snapshotTag(sfDir, "embeddings.parquet"),
-        () => { graft.sim.RankFusion.rrfCandidatesTable(spark, sfDir); () }))
+    val indexBuilds =
+      if (skipIndex) Seq.empty[(String, Double)]
+      else SparkEntry.durableIndexes.flatMap { spec =>
+        spec.benchKey.map(_ -> graft.ops.DurableIndex.rebuild(spark, sfDir, spec))
+      }
     // 1-minute loadavg, sampled per query as well as before/after the
     // run: a loaded machine inflates full-run times up to 10x per query
     // (VERDICT r6 — every apparent r6 "regression" was load noise), so
@@ -126,32 +90,8 @@ object Bench {
         }
       (name, (System.nanoTime() - t0) / 1e9, ok, loadavg())
     }
-    // Between-queries GC cadence (r20, guide §5) — BUILT, A/B'D, AND
-    // LEFT DEFAULT-OFF. Motivation (r19 verdict "in-run inflation"):
-    // eager localCheckpoint blocks and per-query broadcasts are only
-    // reaped when a DRIVER GC lets ContextCleaner process their weak
-    // references, so r19 saw queries late in the run at 3–5× their
-    // isolated times (q280 5.9 s in-run vs 1.2 isolated). Measured
-    // this round (OPTIMIZATION_r20.md §2.5): (a) at HEAD the
-    // inflation no longer reproduces — q280/q281/q282 time at
-    // isolated level in-run across five full sf0.1 runs WITHOUT the
-    // cadence (the r19 inflation rode on the since-removed IVF
-    // sort+spill shapes' heap churn); (b) WITH the cadence, full GCs
-    // between queries made broad shallow regressions (+0.5–2 s/query,
-    // q02 0.4→5.7 s) — post-GC heap uncommit/recommit and cleaner
-    // work landing inside the next timed region. Net: harmful on this
-    // engine today. SPARK_GRAFT_BENCH_GC=1 re-enables it for
-    // diagnosis; the 100 ms pause lets ContextCleaner drain outside
-    // the timed regions. Timed work is identical either way.
-    val gcBetween = sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")
-    def gcDrain(): Unit = if (gcBetween) { System.gc(); Thread.sleep(100) }
-    gcDrain() // once after warmup + index builds, so q01 starts clean
     val loadStart = loadavg()
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val r = time(name, fn)
-      gcDrain()
-      r
-    }
+    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) => time(name, fn) }
     val loadEnd = loadavg()
     // Isolated re-timing: the full sequential run accumulates heap/GC
     // pressure (PERF_NOTES: 1-2 s/query) and is exposed to machine load,

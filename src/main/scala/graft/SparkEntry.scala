@@ -33,4 +33,22 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     packs.iterator.flatMap(_.oracleSql).toMap
+
+  /** Every durable index the registry's queries build, in the order
+    * `graft.Bench` times those that carry an `index_build` key. */
+  def durableIndexes: Seq[graft.ops.DurableIndex.Spec] = Seq(
+    graft.dedup.DedupQueries.CorpusIndex,
+    graft.sim.SimilarityQueries.IvfIndex,
+    graft.text.Scrub.SpanGrams,
+    graft.sim.SimilarityQueries.IvfAppended,
+    graft.dedup.DedupQueries.ClusterLabels,
+    graft.sim.KMeans.Centroids,
+    graft.dedup.DedupQueries.VerifiedPairs,
+    graft.sim.SimilarityQueries.SemanticDrops,
+    graft.sim.JlIvf.JlIvfIndex,
+    graft.sim.RankFusion.RrfCandidates,
+    graft.ops.Maintenance.MergeBase,
+    graft.ops.Formats.OrcDocs,
+    graft.ops.Formats.JsonDocs,
+  )
 }

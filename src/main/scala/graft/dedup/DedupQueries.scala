@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Tables
+import graft.ops.{DurableIndex, Tables}
 
 /** Deduplication operators for the training-data pipeline: exact
   * (hash-groupBy), MinHash+LSH banding, SimHash blocking, and
@@ -697,42 +697,27 @@ object DedupQueries {
 
   /** Durable CLUSTER-ASSIGNMENT table: (doc_id, cluster) labels from
     * the q64 large/small-star clustering, persisted once per corpus
-    * snapshot under [[indexRoot]]/clusters-<tag> with the
-    * [[corpusIndex]] lifecycle (snapshot tag from the data files,
+    * snapshot under the index root's clusters-<tag> through
+    * [[graft.ops.DurableIndex.open]] (snapshot tag from the data files,
     * build-once lock, completion marker, per-session catalog
     * re-registration over the durable files). Labels are identical to
     * [[dedupClustersLargeStar]] by construction — the table IS that
     * result written down, so q271 (and any other assignment consumer)
     * reads instead of re-clustering per pull. A data refresh changes
     * the tag and versions the table; stale reuse is impossible. */
-  def clusterAssignmentTable(s: SparkSession, d: String): String = {
-    val tag = graft.ops.DurableIndex.snapshotTag(d, "documents.parquet")
-    val tbl = s"dedup_cluster_labels_$tag"
-    graft.ops.DurableIndex.locked(s"clusters-$tag") {
-      if (!s.catalog.tableExists(tbl)) {
-        val loc = indexRoot.resolve(s"clusters-$tag")
-        if (graft.ops.DurableIndex.complete(loc)) {
-          s.sql(s"CREATE TABLE IF NOT EXISTS $tbl (doc_id BIGINT, cluster BIGINT) " +
-            s"USING PARQUET LOCATION '${loc.resolve("labels")}'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          dedupClustersLargeStar(s, d)
-            .select(col("doc_id").cast("long").as("doc_id"),
-              col("cluster").cast("long").as("cluster"))
-            .write.mode("overwrite")
-            .option("path", loc.resolve("labels").toString)
-            .saveAsTable(tbl)
-          graft.ops.DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    tbl
+  def clusterAssignmentTable(s: SparkSession, d: String): String =
+    DurableIndex.open(s, d, ClusterLabels).table("dedup_cluster_labels")
+
+  val ClusterLabels: DurableIndex.Spec = DurableIndex.Spec("clusters", "documents.parquet",
+    Seq(DurableIndex.Table("dedup_cluster_labels", "labels", "doc_id BIGINT, cluster BIGINT")),
+    Some("cluster_labels")) { (s, d, ix) =>
+    ix.write("dedup_cluster_labels", dedupClustersLargeStar(s, d))
   }
 
   /** Durable VERIFIED-PAIRS table: the banded-MinHash + exact-Jaccard
     * near-dup pairs ([[minHashJaccardPairs]]) written down once per
-    * corpus snapshot under [[indexRoot]]/pairs-<tag> with the
-    * [[corpusIndex]] lifecycle (snapshot tag, build-once lock,
+    * corpus snapshot under the index root's pairs-<tag> through
+    * [[graft.ops.DurableIndex.open]] (snapshot tag, build-once lock,
     * completion marker, per-session catalog re-registration). The
     * pair set is THE shared intermediate of the dedup family — q45's
     * clustering, q116/q187's graphs and q115's audit all start from
@@ -742,29 +727,14 @@ object DedupQueries {
     * persist-and-probe posture; r17 measured q115's recompute
     * composition at 253 s in-run at sf1 when its exchange reuse
     * failed to fire — a probe is immune to that by construction). */
-  def verifiedPairsTable(s: SparkSession, d: String): String = {
-    val tag = graft.ops.DurableIndex.snapshotTag(d, "documents.parquet")
-    val tbl = s"dedup_verified_pairs_$tag"
-    graft.ops.DurableIndex.locked(s"pairs-$tag") {
-      if (!s.catalog.tableExists(tbl)) {
-        val loc = indexRoot.resolve(s"pairs-$tag")
-        if (graft.ops.DurableIndex.complete(loc)) {
-          s.sql(s"CREATE TABLE IF NOT EXISTS $tbl " +
-            "(doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE) " +
-            s"USING PARQUET LOCATION '${loc.resolve("pairs")}'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          minHashJaccardPairs(s, d)
-            .select(col("doc_a").cast("long").as("doc_a"),
-              col("doc_b").cast("long").as("doc_b"), col("jaccard"))
-            .write.mode("overwrite")
-            .option("path", loc.resolve("pairs").toString)
-            .saveAsTable(tbl)
-          graft.ops.DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    tbl
+  def verifiedPairsTable(s: SparkSession, d: String): String =
+    DurableIndex.open(s, d, VerifiedPairs).table("dedup_verified_pairs")
+
+  val VerifiedPairs: DurableIndex.Spec = DurableIndex.Spec("pairs", "documents.parquet",
+    Seq(DurableIndex.Table("dedup_verified_pairs", "pairs",
+      "doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE")),
+    Some("dedup_pairs")) { (s, d, ix) =>
+    ix.write("dedup_verified_pairs", minHashJaccardPairs(s, d))
   }
 
   /** q105 — cluster REPRESENTATIVE selection: after near-dup
@@ -1064,14 +1034,14 @@ object DedupQueries {
     * adds ~64/B bits to the key (keys are B−k blocks, below), dividing
     * collision mass by ~2^(64/B); stepping B each ~2^13 growth in n
     * keeps n²/2^keybits ~linear in n. Thresholds are MEASURED, not
-    * guessed (AbSimhash A/B, idle box, emit-once shape): B=5 beats
-    * B=4 already at sf0.1 (5·10³ docs: 0.97 vs 1.15 s) and decisively
-    * at sf1 (5·10⁴: 4.6 vs 10.4 s) — the 26-bit key pays for its 10/4
-    * explode fan-out as soon as the n²/2^16 collision term is
-    * non-trivial — so B=5 starts at 2·10³ and only the tiny-corpus
-    * tail keeps the classic 4-block scheme. B=6 (the Manku WWW'07
-    * table count, 20 combos × 33-bit keys) from 10⁸, where n²/2^26
-    * collision mass would re-dominate. */
+    * guessed (PERF_NOTES.md "Round-14 q62" A/B, idle box, emit-once
+    * shape): B=5 beats B=4 already at sf0.1 (5·10³ docs: 0.97 vs
+    * 1.15 s) and decisively at sf1 (5·10⁴: 4.6 vs 10.4 s) — the 26-bit
+    * key pays for its 10/4 explode fan-out as soon as the n²/2^16
+    * collision term is non-trivial — so B=5 starts at 2·10³ and only
+    * the tiny-corpus tail keeps the classic 4-block scheme. B=6 (the
+    * Manku WWW'07 table count, 20 combos × 33-bit keys) from 10⁸,
+    * where n²/2^26 collision mass would re-dominate. */
   def pigeonholeBlocks(n: Long, maxHamming: Int): Int =
     if (n < 2000L) maxHamming + 1
     else if (n < 100000000L) maxHamming + 2
@@ -1334,7 +1304,8 @@ object DedupQueries {
     // discipline): edges/deg/edgesDeg each re-derive `pairs`, and
     // exchange reuse does not reliably dedupe the union+agg+join
     // consumers — the r13 sf3 run measured q116 at 457 s ≈ 4× the
-    // 115 s pairs pipeline, vs ~0.5 s/round once pinned (ScaleProbe)
+    // 115 s pairs pipeline, vs ~0.5 s/round once pinned (PERF_NOTES.md
+    // "Round-13 third scale point")
     val pairs = minHashJaccardPairs(s, d).select("doc_a", "doc_b")
       .localCheckpoint(true)
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -1564,11 +1535,6 @@ object DedupQueries {
     * shuffle on EVERY nightly run). */
   final val IndexBuckets = 8 // final: inlined into cross-object SQL (see IncBatchMod)
 
-  /** Root for persisted indexes — shared machinery in
-    * [[graft.ops.DurableIndex]] (snapshot tagging, build locking,
-    * completion marker); exposed here for the spec's file assertions. */
-  def indexRoot: java.nio.file.Path = graft.ops.DurableIndex.root
-
   /** The corpus-side dedup index as DURABLE bucketed parquet tables,
     * built at most once per data snapshot and REUSED across sessions
     * (VERDICT r7 item 2 — tomorrow's nightly run must probe, not
@@ -1582,7 +1548,8 @@ object DedupQueries {
     *    so the join keys equal the bucket spec exactly and the bucketed
     *    scan's HashPartitioning satisfies the join's distribution.
     *
-    * Lifecycle: files live under [[indexRoot]]/dedup-<snapshot tag> and are
+    * Lifecycle ([[CorpusIndex]] through [[graft.ops.DurableIndex.open]]):
+    * files live under the index root's dedup-<snapshot tag> and are
     * deliberately NOT deleted on exit — they are the artifact. Catalog
     * entries are per-session; a session that finds the files (marker
     * present) re-registers them as EXTERNAL bucketed tables via DDL —
@@ -1596,65 +1563,41 @@ object DedupQueries {
     * side is read pre-partitioned with no exchange and no signature
     * recomputation. Cost per run ∝ batch size, not index size. */
   def corpusIndex(s: SparkSession, d: String): (String, String) = {
-    val tag = graft.ops.DurableIndex.snapshotTag(d, "documents.parquet")
-    val hashTbl = s"inc_corpus_hashes_$tag"
-    val bandTbl = s"inc_corpus_bands_$tag"
-    val textTbl = appendedTextsTable(s, d)
-    graft.ops.DurableIndex.locked(tag) {
-      if (!s.catalog.tableExists(hashTbl) || !s.catalog.tableExists(bandTbl) ||
-          !s.catalog.tableExists(textTbl)) {
-        val loc = indexRoot.resolve(s"dedup-$tag")
-        if (graft.ops.DurableIndex.complete(loc)) {
-          // reuse: redeclare the external bucketed tables over the
-          // existing files (written by saveAsTable with this exact
-          // bucket spec, so file naming carries the bucket ids)
-          s.sql(s"CREATE TABLE IF NOT EXISTS $hashTbl (h STRING) USING PARQUET " +
-            s"CLUSTERED BY (h) SORTED BY (h) INTO $IndexBuckets BUCKETS " +
-            s"LOCATION '${loc.resolve("hashes")}'")
-          s.sql(s"CREATE TABLE IF NOT EXISTS $bandTbl (doc_id BIGINT, band_key STRING) " +
-            s"USING PARQUET CLUSTERED BY (band_key) SORTED BY (band_key) " +
-            s"INTO $IndexBuckets BUCKETS LOCATION '${loc.resolve("bands")}'")
-          s.sql(s"CREATE TABLE IF NOT EXISTS $textTbl (doc_id BIGINT, text STRING) " +
-            s"USING PARQUET LOCATION '${loc.resolve("texts")}'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          val isCorpus = col("doc_id") % IncBatchMod =!= IncBatchRem
-          val corpusDocs = Tables.documents(s, d).filter(isCorpus)
-          corpusDocs.select(md5(col("text")).as("h")).distinct()
-            .write.mode("overwrite")
-            .option("path", loc.resolve("hashes").toString)
-            .bucketBy(IndexBuckets, "h").sortBy("h")
-            .saveAsTable(hashTbl)
-          minHashBandsOf(corpusDocs)
-            .select(col("doc_id"),
-              concat_ws("|", col("band"), col("band_val")).as("band_key"))
-            .write.mode("overwrite")
-            .option("path", loc.resolve("bands").toString)
-            .bucketBy(IndexBuckets, "band_key").sortBy("band_key")
-            .saveAsTable(bandTbl)
-          // the write-back text side-table starts EMPTY: it holds only
-          // texts appended after the snapshot (the snapshot's own texts
-          // stay in documents.parquet — no duplication at build time)
-          corpusDocs.select(col("doc_id"), col("text")).limit(0)
-            .write.mode("overwrite")
-            .option("path", loc.resolve("texts").toString)
-            .saveAsTable(textTbl)
-          graft.ops.DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    (hashTbl, bandTbl)
+    val ix = DurableIndex.open(s, d, CorpusIndex)
+    (ix.table("inc_corpus_hashes"), ix.table("inc_corpus_bands"))
   }
 
-  /** Name of the index's appended-texts side table — (doc_id, text) of
-    * every document appended SINCE the snapshot, so the near-dup verify
-    * stage can resolve candidate texts that documents.parquet doesn't
-    * hold. Deliberately NOT under the `inc_corpus` prefix: it is never
-    * a probe target (the tiny candidate set joins it broadcast, like
-    * the documents table itself), so the exchange-free plan assertions
-    * scope to the bucketed probe tables only. */
-  private def appendedTextsTable(s: SparkSession, d: String): String =
-    s"inc_texts_${graft.ops.DurableIndex.snapshotTag(d, "documents.parquet")}"
+  /** The dedup corpus index's spec. `inc_texts` is the appended-texts
+    * side table — (doc_id, text) of every document appended SINCE the
+    * snapshot, so the near-dup verify stage can resolve candidate texts
+    * that documents.parquet doesn't hold. Deliberately NOT under the
+    * `inc_corpus` prefix: it is never a probe target (the tiny
+    * candidate set joins it broadcast, like the documents table
+    * itself), so the exchange-free plan assertions scope to the
+    * bucketed probe tables only. */
+  val CorpusIndex: DurableIndex.Spec = DurableIndex.Spec("dedup", "documents.parquet", Seq(
+      DurableIndex.Table("inc_corpus_hashes", "hashes", "h STRING",
+        Some("h" -> IndexBuckets)),
+      DurableIndex.Table("inc_corpus_bands", "bands", "doc_id BIGINT, band_key STRING",
+        Some("band_key" -> IndexBuckets)),
+      DurableIndex.Table("inc_texts", "texts", "doc_id BIGINT, text STRING")),
+    Some("dedup_corpus")) { (s, d, ix) =>
+    val corpusDocs = Tables.documents(s, d)
+      .filter(col("doc_id") % IncBatchMod =!= IncBatchRem)
+    ix.write("inc_corpus_hashes", corpusHashes(corpusDocs))
+    ix.write("inc_corpus_bands", bandKeysOf(corpusDocs))
+    // the write-back text side-table starts EMPTY: it holds only
+    // texts appended after the snapshot (the snapshot's own texts
+    // stay in documents.parquet — no duplication at build time)
+    ix.write("inc_texts", corpusDocs.limit(0))
+  }
+
+  private def corpusHashes(docs: DataFrame): DataFrame =
+    docs.select(md5(col("text")).as("h")).distinct()
+
+  private def bandKeysOf(docs: DataFrame): DataFrame =
+    minHashBandsOf(docs).select(col("doc_id"),
+      concat_ws("|", col("band"), col("band_val")).as("band_key"))
 
   /** The nightly loop's WRITE-BACK: append a batch's signatures to the
     * persisted corpus index, so tomorrow's run sees today's admitted
@@ -1668,29 +1611,17 @@ object DedupQueries {
     * an append); the parquet commit protocol keeps a failed append
     * from leaving half-visible files. Cost ∝ batch, never index. */
   def appendToCorpusIndex(s: SparkSession, d: String, newDocs: DataFrame): Unit = {
-    val (hashTbl, bandTbl) = corpusIndex(s, d)
-    newDocs.select(md5(col("text")).as("h")).distinct()
-      .write.mode("append")
-      .bucketBy(IndexBuckets, "h").sortBy("h")
-      .saveAsTable(hashTbl)
-    minHashBandsOf(newDocs)
-      .select(col("doc_id"),
-        concat_ws("|", col("band"), col("band_val")).as("band_key"))
-      .write.mode("append")
-      .bucketBy(IndexBuckets, "band_key").sortBy("band_key")
-      .saveAsTable(bandTbl)
+    val ix = DurableIndex.open(s, d, CorpusIndex)
+    ix.append("inc_corpus_hashes", corpusHashes(newDocs))
+    ix.append("inc_corpus_bands", bandKeysOf(newDocs))
     // texts land in the side table so future near-dup candidates against
     // these docs can still be exact-Jaccard verified
-    newDocs.select(col("doc_id"), col("text"))
-      .write.mode("append")
-      .saveAsTable(appendedTextsTable(s, d))
+    ix.append("inc_texts", newDocs)
     // see SimilarityQueries.appendToIvfIndex: when `newDocs` rides in
     // from a foreachBatch Dataset the write refreshes the STREAM
     // CLONE's relation cache, not s's — refresh s so callers on s see
     // the appended index immediately.
-    s.catalog.refreshTable(hashTbl)
-    s.catalog.refreshTable(bandTbl)
-    s.catalog.refreshTable(appendedTextsTable(s, d))
+    CorpusIndex.tables.foreach(t => s.catalog.refreshTable(ix.table(t.name)))
   }
 
   /** Index MAINTENANCE: merge the accumulated per-append files back to
@@ -1698,29 +1629,20 @@ object DedupQueries {
     * after a year of nightly runs each probe task would open ~365 small
     * files). Rewrites both bucketed probe tables through the same
     * bucket spec and swaps the files in place ([[graft.ops.DurableIndex
-    * .compactBucketedTable]]); probe results and the exchange-free plan
+    * .compact]]); probe results and the exchange-free plan
     * are unchanged (DedupSpec asserts both). The texts side table is
     * broadcast-side (never a probe target), so its file count is not a
     * per-probe-task cost and it is left alone. Cost ∝ index size — run
     * it from the maintenance window, not the nightly probe. */
-  def compactCorpusIndex(s: SparkSession, d: String): Unit = {
-    val tag = graft.ops.DurableIndex.snapshotTag(d, "documents.parquet")
-    val (hashTbl, bandTbl) = corpusIndex(s, d)
-    val loc = indexRoot.resolve(s"dedup-$tag")
-    graft.ops.DurableIndex.locked(tag) {
-      graft.ops.DurableIndex.compactBucketedTable(
-        s, hashTbl, loc.resolve("hashes"), "h", IndexBuckets)
-      graft.ops.DurableIndex.compactBucketedTable(
-        s, bandTbl, loc.resolve("bands"), "band_key", IndexBuckets)
-    }
-  }
+  def compactCorpusIndex(s: SparkSession, d: String): Unit =
+    DurableIndex.compact(s, d, CorpusIndex, "inc_corpus_hashes", "inc_corpus_bands")
 
   /** q75 — incremental dedup against the PERSISTED corpus index: same
     * output as [[incrementalDedup]] (same oracle), but the corpus md5s
     * and band table are read from the bucketed tables [[corpusIndex]]
     * wrote once. Signature compute + shuffle happen only for the batch:
     * the bucketed corpus scans arrive pre-partitioned on the join key,
-    * so EnsureRequirements shuffles ONLY the batch side (PlanAuditSpec
+    * so EnsureRequirements shuffles ONLY the batch side (DedupSpec
     * asserts zero exchanges above the index scans). This is the plan a
     * nightly crawl runs at 100 TB — daily cost ∝ batch, not index. */
   def incrementalDedupIndexed(s: SparkSession, d: String): DataFrame =
@@ -1737,18 +1659,17 @@ object DedupQueries {
     * exchange, no recompute), so each call costs ∝ the batch. */
   def incrementalVerdictsIndexed(s: SparkSession, d: String,
                                  batch: DataFrame): DataFrame = {
-    val (hashTbl, bandTbl) = corpusIndex(s, d)
+    val ix = DurableIndex.open(s, d, CorpusIndex)
     // candidate-text resolution covers BOTH the snapshot's documents and
     // everything appended to the index since (the write-back side table)
     val docs = Tables.documents(s, d).select("doc_id", "text")
-      .union(s.table(appendedTextsTable(s, d)))
+      .union(s.table(ix.table("inc_texts")))
     val exactDup = batch.select(col("doc_id"), md5(col("text")).as("h"))
-      .join(s.table(hashTbl), Seq("h"), "left_semi")
+      .join(s.table(ix.table("inc_corpus_hashes")), Seq("h"), "left_semi")
       .select("doc_id")
-    val cand = minHashBandsOf(batch)
-      .select(col("doc_id"),
-        concat_ws("|", col("band"), col("band_val")).as("band_key"))
-      .join(s.table(bandTbl).withColumnRenamed("doc_id", "corpus_id"), "band_key")
+    val cand = bandKeysOf(batch)
+      .join(s.table(ix.table("inc_corpus_bands")).withColumnRenamed("doc_id", "corpus_id"),
+        "band_key")
       .select("doc_id", "corpus_id")
       .distinct()
     // same engine-exact scaled-integer threshold as q71 (q75 ≡ q71

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * Spark's `md5` returns the lowercase hex digest, and each nibble is
   * recovered with `instr('0123456789abcdef', substring(hex, p, 1)) - 1`.
   *
-  * NOT the hot-path form. The r10 VariantBench measurement
-  * (PERF_NOTES) showed this 3–4× SLOWER than the Scala UDF it was
+  * NOT the hot-path form. The r10 measurement (PERF_NOTES.md
+  * "Round-10 HLL hot-path hash") showed this 3–4× SLOWER than the Scala UDF it was
   * meant to replace — Spark's `Md5` expression instantiates a fresh
   * commons-codec MessageDigest per call and renders hex that this then
   * re-parses — and the native [[Md5LowerLong]] expression beats both.

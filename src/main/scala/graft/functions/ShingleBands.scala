@@ -19,8 +19,9 @@ import graft.dedup.Hashing
   * are untouched), minus the ScalaUDF wrapper's costs: no
   * encoder/decoder roundtrip per row, no codegen fence splitting the
   * whole-stage span (the r10 `Md5LowerLong` conversion measured the
-  * win for exactly this class — PERF_NOTES r10 variant table; r13
-  * VariantBench numbers for these three are alongside).
+  * win for exactly this class — PERF_NOTES r10 variant table; the r13
+  * numbers for these three are in PERF_NOTES.md "Round-13
+  * signature-pipeline A/B").
   *
   * The permutation constants are derived per (count, seed) exactly as
   * [[Hashing.permConstants]] and cached per JVM — `permConstants(64,

@@ -33,25 +33,22 @@ object Formats {
     * property that makes the check valid at any parallelism). At
     * 100 TB both sides stream; nothing is driver-sized. */
   def orcRoundTrip(s: SparkSession, d: String): DataFrame = {
-    val tag = DurableIndex.snapshotTag(d, "documents.parquet")
-    val loc = DurableIndex.root.resolve(s"orc-docs-$tag")
-    DurableIndex.locked(s"orc-docs-$tag") {
-      if (!DurableIndex.complete(loc)) {
-        java.nio.file.Files.createDirectories(loc)
-        Tables.documents(s, d).write.mode("overwrite")
-          .orc(loc.resolve("docs").toString)
-        DurableIndex.markComplete(loc)
-      }
-    }
+    val docs = DurableIndex.open(s, d, OrcDocs).path("docs")
     val h = graft.functions.GraftFunctions.md5Lower64(
       concat_ws("|", lit("orc:"), col("doc_id"), col("lang"),
         col("n_chars"), col("text")))
       .bitwiseAND(Long.MaxValue)
-    s.read.orc(loc.resolve("docs").toString)
+    s.read.orc(docs)
       .select(col("source"), h.as("h"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_rows"), bit_xor(col("h")).as("xor_sum"))
   }
+
+  /** q221's ORC copy of the documents table (a file, no catalog table). */
+  val OrcDocs: DurableIndex.Spec =
+    DurableIndex.Spec("orc-docs", "documents.parquet") { (s, d, ix) =>
+      Tables.documents(s, d).write.mode("overwrite").orc(ix.path("docs"))
+    }
 
   // The oracle reads the PARQUET original — that asymmetry IS the
   // check: parquet-in must equal orc-out cell for cell.
@@ -79,27 +76,24 @@ object Formats {
     * compressed write, one JSONL scan into a |sources|-bounded
     * aggregate with commutative map-side XOR partials. */
   def jsonRoundTrip(s: SparkSession, d: String): DataFrame = {
-    val tag = DurableIndex.snapshotTag(d, "documents.parquet")
-    val loc = DurableIndex.root.resolve(s"json-docs-$tag")
-    DurableIndex.locked(s"json-docs-$tag") {
-      if (!DurableIndex.complete(loc)) {
-        java.nio.file.Files.createDirectories(loc)
-        Tables.documents(s, d).write.mode("overwrite")
-          .option("compression", "gzip")
-          .json(loc.resolve("docs").toString)
-        DurableIndex.markComplete(loc)
-      }
-    }
+    val docs = DurableIndex.open(s, d, JsonDocs).path("docs")
     val h = graft.functions.GraftFunctions.md5Lower64(
       concat_ws("|", lit("jsonl:"), col("doc_id"), col("lang"),
         col("n_chars"), col("text")))
       .bitwiseAND(Long.MaxValue)
     s.read.schema(Tables.documents(s, d).schema)
-      .json(loc.resolve("docs").toString)
+      .json(docs)
       .select(col("source"), h.as("h"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_rows"), bit_xor(col("h")).as("xor_sum"))
   }
+
+  /** q266's gzip JSON-lines copy of the documents table (a file). */
+  val JsonDocs: DurableIndex.Spec =
+    DurableIndex.Spec("json-docs", "documents.parquet") { (s, d, ix) =>
+      Tables.documents(s, d).write.mode("overwrite")
+        .option("compression", "gzip").json(ix.path("docs"))
+    }
 
   val jsonRoundTripSql: String =
     s"""WITH h AS (SELECT source,

@@ -187,7 +187,7 @@ object Layout {
     * exact bins [[compactionPlanFrom]] assigns, one physical parquet
     * file per planned (lang, bin) group, laid out as a lang/bin
     * hive-partitioned tree so a per-`lang` reader partition-prunes to
-    * its own files. The DurableIndex.compactBucketedTable machinery
+    * its own files. The DurableIndex.compact machinery
     * generalized from "restore 1 file per hash bucket" to "apply an
     * arbitrary size-targeted rebinning".
     *

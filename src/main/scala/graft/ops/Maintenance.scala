@@ -83,7 +83,7 @@ object Maintenance {
   /** Buckets for the persisted merge base. Small here (test SFs); at
     * 100 TB this is sized so a bucket's rows fit one task (~thousands
     * of buckets) — the count only has to match between build and
-    * re-registration, which the DDL below guarantees. */
+    * re-registration, which [[MergeBase]] guarantees. */
   val MergeBuckets = 8
 
   /** The persisted DOC_ID-BUCKETED base table the docstring's 100 TB
@@ -92,29 +92,14 @@ object Maintenance {
     * completion marker, bucket-spec re-registration on reuse — the
     * same contract as q75's dedup index). Bucketed+sorted on doc_id,
     * so a doc_id-keyed join reads it EXCHANGE-FREE and sort-free. */
-  def bucketedBaseTable(s: SparkSession, d: String): String = {
-    val tag = graft.ops.DurableIndex.snapshotTag(d, "documents.parquet")
-    val tbl = s"merge_base_$tag"
-    graft.ops.DurableIndex.locked(s"merge-$tag") {
-      if (!s.catalog.tableExists(tbl)) {
-        val loc = graft.ops.DurableIndex.root.resolve(s"merge-base-$tag")
-        if (graft.ops.DurableIndex.complete(loc)) {
-          s.sql(s"CREATE TABLE IF NOT EXISTS $tbl " +
-            "(doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT) " +
-            s"USING PARQUET CLUSTERED BY (doc_id) SORTED BY (doc_id) " +
-            s"INTO $MergeBuckets BUCKETS LOCATION '$loc'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          documents(s, d).select("doc_id", "lang", "source", "n_chars")
-            .write.mode("overwrite")
-            .option("path", loc.toString)
-            .bucketBy(MergeBuckets, "doc_id").sortBy("doc_id")
-            .saveAsTable(tbl)
-          graft.ops.DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    tbl
+  def bucketedBaseTable(s: SparkSession, d: String): String =
+    DurableIndex.open(s, d, MergeBase).table("merge_base")
+
+  val MergeBase: DurableIndex.Spec = DurableIndex.Spec("merge-base", "documents.parquet",
+    Seq(DurableIndex.Table("merge_base", "",
+      "doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT",
+      Some("doc_id" -> MergeBuckets)))) { (s, d, ix) =>
+    ix.write("merge_base", documents(s, d))
   }
 
   /** q152's kernel against the PERSISTED BUCKETED base — the

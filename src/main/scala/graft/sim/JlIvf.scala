@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.DurableIndex
+
 /** q287 — the JL family's DEPLOYED configuration: IVF search in the
   * 16-dim JL-projected space over a TRAINED √N-list Lloyd codebook,
   * probing a PERSISTED index — the composition q284's own design note
@@ -74,42 +76,19 @@ object JlIvf {
     * embeddings snapshot under the shared [[graft.ops.DurableIndex]]
     * lifecycle. The N·√N assignment lives HERE, not in any pull. */
   def jlIvfIndex(s: SparkSession, d: String): (String, String) = {
-    import graft.ops.DurableIndex
-    val tag = DurableIndex.snapshotTag(d, "embeddings.parquet")
-    val centTbl = s"jlivf_cents_$tag"
-    val listTbl = s"jlivf_lists_$tag"
-    val nb = SimilarityQueries.IvfIndexBuckets
-    DurableIndex.locked(s"jlivf-$tag") {
-      if (!s.catalog.tableExists(centTbl) || !s.catalog.tableExists(listTbl)) {
-        val loc = DurableIndex.root.resolve(s"jlivf-$tag")
-        if (DurableIndex.complete(loc)) {
-          s.sql(s"CREATE TABLE IF NOT EXISTS $centTbl " +
-            "(cent_id BIGINT, ce ARRAY<DOUBLE>) USING PARQUET " +
-            s"LOCATION '${loc.resolve("cents")}'")
-          s.sql(s"CREATE TABLE IF NOT EXISTS $listTbl " +
-            "(cent_id BIGINT, vec_id BIGINT, e ARRAY<DOUBLE>) USING PARQUET " +
-            s"CLUSTERED BY (cent_id) SORTED BY (cent_id) " +
-            s"INTO $nb BUCKETS LOCATION '${loc.resolve("lists")}'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          val emb = SimilarityQueries.jlProjected(s, d)
-          val cents = codebookFrom(emb)
-          cents.select(col("cent_id").cast("long").as("cent_id"), col("ce"))
-            .write.mode("overwrite")
-            .option("path", loc.resolve("cents").toString)
-            .saveAsTable(centTbl)
-          SimilarityQueries.ivfAssign(emb, cents)
-            .select(col("cent_id").cast("long").as("cent_id"),
-              col("vec_id").cast("long").as("vec_id"), col("e"))
-            .write.mode("overwrite")
-            .option("path", loc.resolve("lists").toString)
-            .bucketBy(nb, "cent_id").sortBy("cent_id")
-            .saveAsTable(listTbl)
-          DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    (centTbl, listTbl)
+    val ix = DurableIndex.open(s, d, JlIvfIndex)
+    (ix.table("jlivf_cents"), ix.table("jlivf_lists"))
+  }
+
+  val JlIvfIndex: DurableIndex.Spec = DurableIndex.Spec("jlivf", "embeddings.parquet", Seq(
+      DurableIndex.Table("jlivf_cents", "cents", "cent_id BIGINT, ce ARRAY<DOUBLE>"),
+      DurableIndex.Table("jlivf_lists", "lists", "cent_id BIGINT, vec_id BIGINT, e ARRAY<DOUBLE>",
+        Some("cent_id" -> SimilarityQueries.IvfIndexBuckets))),
+    Some("jl_ivf")) { (s, d, ix) =>
+    val emb = SimilarityQueries.jlProjected(s, d)
+    val cents = codebookFrom(emb)
+    ix.write("jlivf_cents", cents)
+    ix.write("jlivf_lists", SimilarityQueries.ivfAssign(emb, cents))
   }
 
   /** q287 — probe-only search against the persisted JL-IVF index at

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Tables
+import graft.ops.{DurableIndex, Tables}
 
 /** Distributed LLOYD'S k-means over the embedding table — the REAL
   * codebook trainer behind the IVF family's deterministic stride
@@ -74,8 +74,8 @@ object KMeans {
   }
 
   /** Table-level [[codebookFrom]]. */
-  def codebook(s: SparkSession, d: String, iters: Int = Iters): DataFrame =
-    codebookFrom(embFrame(s, d), iters)
+  def codebook(s: SparkSession, d: String): DataFrame =
+    codebookFrom(embFrame(s, d))
 
   /** Durable TRAINED-CODEBOOK table: the Lloyd centroids persisted
     * once per corpus snapshot under the [[graft.ops.DurableIndex]]
@@ -93,34 +93,22 @@ object KMeans {
     * assignment from a fresh train (KMeansSpec pins it) and the
     * oracle is unchanged. A data refresh changes the tag and versions
     * the table; stale reuse is impossible. */
-  def centroidsTable(s: SparkSession, d: String, iters: Int = Iters): String = {
-    val tag = graft.ops.DurableIndex.snapshotTag(d, "embeddings.parquet")
-    val tbl = s"kmeans_centroids_${iters}_$tag"
-    graft.ops.DurableIndex.locked(s"kmeans$iters-$tag") {
-      if (!s.catalog.tableExists(tbl)) {
-        val loc = graft.ops.DurableIndex.root.resolve(s"kmeans$iters-$tag")
-        if (graft.ops.DurableIndex.complete(loc)) {
-          s.sql(s"CREATE TABLE IF NOT EXISTS $tbl " +
-            "(cent_id BIGINT, ce ARRAY<DOUBLE>) USING PARQUET " +
-            s"LOCATION '${loc.resolve("centroids")}'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          codebook(s, d, iters)
-            .select(col("cent_id").cast("long").as("cent_id"), col("ce"))
-            .write.mode("overwrite")
-            .option("path", loc.resolve("centroids").toString)
-            .saveAsTable(tbl)
-          graft.ops.DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    tbl
+  def centroidsTable(s: SparkSession, d: String): String =
+    DurableIndex.open(s, d, Centroids).table(s"kmeans_centroids_$Iters")
+
+  /** The location and table names carry [[Iters]], so a change of
+    * refinement depth versions the stored codebook. */
+  val Centroids: DurableIndex.Spec = DurableIndex.Spec(s"kmeans$Iters", "embeddings.parquet",
+    Seq(DurableIndex.Table(s"kmeans_centroids_$Iters", "centroids",
+      "cent_id BIGINT, ce ARRAY<DOUBLE>")),
+    Some("kmeans_centroids")) { (s, d, ix) =>
+    ix.write(s"kmeans_centroids_$Iters", codebook(s, d))
   }
 
   /** The persisted codebook as a frame — the probe side of every
     * trained-centroid consumer (q110 assignment, q113 search). */
-  def storedCodebook(s: SparkSession, d: String, iters: Int = Iters): DataFrame =
-    s.table(centroidsTable(s, d, iters)).select(col("cent_id"), col("ce"))
+  def storedCodebook(s: SparkSession, d: String): DataFrame =
+    s.table(centroidsTable(s, d))
 
   /** [[kmeansAssign]] over an explicit (vec_id, e) frame. */
   def kmeansAssignFrom(emb: DataFrame, iters: Int = Iters): DataFrame = {
@@ -145,9 +133,9 @@ object KMeans {
     * 1.5 s at sf1), which was the entire r16/r17 "q110 residual". The
     * training-inclusive form lives on as [[kmeansAssignFrom]] (the
     * spec's blob-test unit and the build path itself). */
-  def kmeansAssign(s: SparkSession, d: String, iters: Int = Iters): DataFrame = {
+  def kmeansAssign(s: SparkSession, d: String): DataFrame = {
     val assigned = SimilarityQueries
-      .ivfAssignSlim(embFrame(s, d), storedCodebook(s, d, iters))
+      .ivfAssignSlim(embFrame(s, d), storedCodebook(s, d))
     val sizes = assigned.groupBy("cent_id").agg(count(lit(1)).as("cluster_size"))
     assigned.join(broadcast(sizes), "cent_id")
       .select(col("vec_id"), col("cent_id"), col("cluster_size"))

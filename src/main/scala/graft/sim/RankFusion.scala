@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.DurableIndex
+
 /** RECIPROCAL-RANK FUSION across the engine's three approximate
   * vector searchers — IVF (q44), SQ8 (q149) and BQ (q203) — the
   * standard ensemble move in production retrieval (RRF, Cormack et
@@ -52,38 +54,22 @@ object RankFusion {
     * must not serve a four-list consumer — its dirs are simply
     * ignored. [[rrfFusion]] pins itself to the original three lists,
     * so q213/q214 results are untouched by the extra rows. */
-  def rrfCandidatesTable(s: SparkSession, d: String): String = {
-    val tag = graft.ops.DurableIndex.snapshotTag(d, "embeddings.parquet")
-    val tbl = s"rrf_candidates2_$tag"
-    graft.ops.DurableIndex.locked(s"rrfcand2-$tag") {
-      if (!s.catalog.tableExists(tbl)) {
-        val loc = graft.ops.DurableIndex.root.resolve(s"rrfcand2-$tag")
-        if (graft.ops.DurableIndex.complete(loc)) {
-          s.sql(s"CREATE TABLE IF NOT EXISTS $tbl " +
-            "(searcher STRING, qid BIGINT, neighbor_id BIGINT, rank INT) " +
-            s"USING PARQUET LOCATION '${loc.resolve("cands")}'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          Seq(
-            "ivf" -> SimilarityQueries.ivfTopK(s, d),
-            "sq8" -> ScalarQuantization.sqTopK(s, d),
-            "bq" -> BinaryQuantization.bqTopK(s, d),
-            "jl" -> SimilarityQueries.jlTopKIvf(s, d))
-            .map { case (name, df) =>
-              df.select(lit(name).as("searcher"),
-                col("qid").cast("long").as("qid"),
-                col("neighbor_id").cast("long").as("neighbor_id"),
-                col("rank").cast("int").as("rank"))
-            }
-            .reduce(_ unionAll _)
-            .write.mode("overwrite")
-            .option("path", loc.resolve("cands").toString)
-            .saveAsTable(tbl)
-          graft.ops.DurableIndex.markComplete(loc)
-        }
+  def rrfCandidatesTable(s: SparkSession, d: String): String =
+    DurableIndex.open(s, d, RrfCandidates).table("rrf_candidates2")
+
+  val RrfCandidates: DurableIndex.Spec = DurableIndex.Spec("rrfcand2", "embeddings.parquet",
+    Seq(DurableIndex.Table("rrf_candidates2", "cands",
+      "searcher STRING, qid BIGINT, neighbor_id BIGINT, rank INT")),
+    Some("rrf_candidates")) { (s, d, ix) =>
+    ix.write("rrf_candidates2", Seq(
+      "ivf" -> SimilarityQueries.ivfTopK(s, d),
+      "sq8" -> ScalarQuantization.sqTopK(s, d),
+      "bq" -> BinaryQuantization.bqTopK(s, d),
+      "jl" -> SimilarityQueries.jlTopKIvf(s, d))
+      .map { case (name, df) =>
+        df.select(lit(name).as("searcher"), col("qid"), col("neighbor_id"), col("rank"))
       }
-    }
-    tbl
+      .reduce(_ unionAll _))
   }
 
   /** One searcher's (qid, neighbor_id, rank) candidate list, read from

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Hashing
-import graft.ops.Tables
+import graft.ops.{DurableIndex, Tables}
 
 /** Similarity search over the embedding column (`array<float>`, 64-dim).
   *
@@ -461,18 +461,8 @@ object SimilarityQueries {
   /** DataFrame-level core of [[ivfTopK]]: input (vec_id, e).
     *
     * Nearest-centroid assignment (ties: round(cos,6) then lowest
-    * cent_id) is a rank-1 WINDOW over the (vec × centroid) cross
-    * product. The r4 round rewrote this as a lexicographic struct-max
-    * aggregate on the theory that map-side partials would collapse the
-    * cross product before the exchange; measured head-to-head
-    * (tools.VariantBench, sf0.1 and 3×-inflated 6k-vector input) the
-    * window form is consistently ~40% faster — the ObjectHashAggregate
-    * buffers (struct + any_value array copy per group per task) cost
-    * more than the single codegen'd shuffle+sort, at every volume that
-    * fits an executor. The aggregate variant is kept in VariantBench
-    * for the record; at cluster scale the assignment stage is
-    * broadcast-map-side either way and the exchange it feeds is keyed
-    * by cent_id, so the local measurement is the deciding one. */
+    * cent_id) is [[ivfAssign]]; [[ivfAssignSlim]]'s doc records why
+    * neither a rank-1 window nor a struct-max aggregate. */
   def ivfTopKFrom(emb: DataFrame, k: Int = 5, nProbe: Int = NProbe): DataFrame = {
     val cents = ivfCentroids(emb)
     ivfSearch(ivfQueries(emb), ivfAssign(emb, cents), cents, k, nProbe)
@@ -500,7 +490,12 @@ object SimilarityQueries {
     * round-6-then-lowest-id contract (the slim encode preserves it
     * exactly — its doc has the algebra; IvfFamilySpec pins
     * row-identity against the window form), so every consumer's
-    * output is unchanged. */
+    * output is unchanged.
+    *
+    * Raises (through [[ivfAssignSlim]]'s encode) instead of returning
+    * wrong labels when a vector or centroid has zero norm or NaN
+    * components (a null/NaN cosine) or a `cent_id` is outside
+    * [0, 2³²). */
   def ivfAssign(emb: DataFrame, cents: DataFrame): DataFrame = {
     val extras = emb.columns.filterNot(Set("vec_id", "e"))
     ivfAssignSlim(emb, cents)
@@ -510,9 +505,9 @@ object SimilarityQueries {
 
   /** Nearest-centroid assignment WITHOUT the vector payload:
     * (vec_id, cent_id) only, as ONE codegen'd long-max HashAggregate
-    * over the broadcast cross product — the label-only twin of
-    * [[ivfAssign]] (which must carry `e` for the search paths and
-    * keeps its measured-best rank-1 window, r4).
+    * over the broadcast cross product. [[ivfAssign]] is this argmax
+    * plus a vec_id join that re-attaches `e` (and any extra columns)
+    * for the search paths.
     *
     * Why not the window here: WindowGroupLimit still SORTS the whole
     * N·nlist cross product before its exchange — 22 s of q110's sf1
@@ -1052,30 +1047,14 @@ object SimilarityQueries {
     * itself, q115's cross-signal audit, split auditors); persisting
     * it converts every later read into a scan-sized probe instead of
     * a fresh Σ|cell|² pair pass. */
-  def semanticDropsTable(s: SparkSession, d: String): String = {
-    val tag = graft.ops.DurableIndex.snapshotTag(d, "embeddings.parquet")
-    val tbl = s"semantic_drops_$tag"
-    graft.ops.DurableIndex.locked(s"semdrops-$tag") {
-      if (!s.catalog.tableExists(tbl)) {
-        val loc = graft.ops.DurableIndex.root.resolve(s"semdrops-$tag")
-        if (graft.ops.DurableIndex.complete(loc)) {
-          s.sql(s"CREATE TABLE IF NOT EXISTS $tbl " +
-            "(vec_id BIGINT, dup_of BIGINT, n_mates BIGINT, max_cos DOUBLE) " +
-            s"USING PARQUET LOCATION '${loc.resolve("drops")}'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          semanticDedup(s, d)
-            .select(col("vec_id").cast("long").as("vec_id"),
-              col("dup_of").cast("long").as("dup_of"),
-              col("n_mates").cast("long").as("n_mates"), col("max_cos"))
-            .write.mode("overwrite")
-            .option("path", loc.resolve("drops").toString)
-            .saveAsTable(tbl)
-          graft.ops.DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    tbl
+  def semanticDropsTable(s: SparkSession, d: String): String =
+    DurableIndex.open(s, d, SemanticDrops).table("semantic_drops")
+
+  val SemanticDrops: DurableIndex.Spec = DurableIndex.Spec("semdrops", "embeddings.parquet",
+    Seq(DurableIndex.Table("semantic_drops", "drops",
+      "vec_id BIGINT, dup_of BIGINT, n_mates BIGINT, max_cos DOUBLE")),
+    Some("semantic_drops")) { (s, d, ix) =>
+    ix.write("semantic_drops", semanticDedup(s, d))
   }
 
   /** The ε-ball radius for q189's audit — slightly inside
@@ -1160,7 +1139,7 @@ object SimilarityQueries {
     * at 100 TB size it so each bucket holds a manageable slice of the
     * ~√N-wide lists — the assignment shuffle is paid once at build
     * time instead of on every search run. */
-  val IvfIndexBuckets = 8
+  final val IvfIndexBuckets = 8
 
   /** The IVF ANN index as DURABLE parquet tables (the
     * [[graft.ops.DurableIndex]] pattern the dedup corpus index uses —
@@ -1182,64 +1161,40 @@ object SimilarityQueries {
     *    bucketed the same way. At 100 TB this table is ~64× smaller
     *    than the lists and is what q81's ADC probe actually scans.
     *
-    * Files live under [[graft.ops.DurableIndex.root]]/ivf3-<tag> keyed
-    * by the embeddings snapshot (the `3` versions the LAYOUT — r8's
-    * `2` lacked the label column; its dirs are simply ignored); a fresh
-    * session re-registers them as EXTERNAL bucketed tables via DDL
-    * (bucket metadata lives in the catalog, not the files). */
+    * Files live under the index root's ivf3-<tag> keyed by the
+    * embeddings snapshot (the `3` versions the LAYOUT — r8's `2`
+    * lacked the label column; its dirs are simply ignored); a fresh
+    * session re-registers them as EXTERNAL bucketed tables from
+    * [[IvfIndex]]'s DDL (bucket metadata lives in the catalog, not the
+    * files). */
   def ivfIndex(s: SparkSession, d: String): (String, String) = {
-    import graft.ops.DurableIndex
-    val tag = DurableIndex.snapshotTag(d, "embeddings.parquet")
-    val centTbl = s"ivf_cents3_$tag"
-    val listTbl = s"ivf_lists3_$tag"
-    val codeTbl = ivfCodesTable(s, d)
-    DurableIndex.locked(tag) {
-      if (!s.catalog.tableExists(centTbl) || !s.catalog.tableExists(listTbl) ||
-          !s.catalog.tableExists(codeTbl)) {
-        val loc = DurableIndex.root.resolve(s"ivf3-$tag")
-        if (DurableIndex.complete(loc)) {
-          s.sql(s"CREATE TABLE IF NOT EXISTS $centTbl " +
-            "(cent_id BIGINT, ce ARRAY<DOUBLE>) USING PARQUET " +
-            s"LOCATION '${loc.resolve("cents")}'")
-          s.sql(s"CREATE TABLE IF NOT EXISTS $listTbl " +
-            "(cent_id BIGINT, vec_id BIGINT, label INT, e ARRAY<DOUBLE>) USING PARQUET " +
-            s"CLUSTERED BY (cent_id) SORTED BY (cent_id) " +
-            s"INTO $IvfIndexBuckets BUCKETS LOCATION '${loc.resolve("lists")}'")
-          s.sql(s"CREATE TABLE IF NOT EXISTS $codeTbl " +
-            "(cent_id BIGINT, vec_id BIGINT, codes ARRAY<INT>) USING PARQUET " +
-            s"CLUSTERED BY (cent_id) SORTED BY (cent_id) " +
-            s"INTO $IvfIndexBuckets BUCKETS LOCATION '${loc.resolve("codes")}'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          val emb = Tables.embeddings(s, d)
-            .select(col("vec_id"), col("label"),
-              col("embedding").cast("array<double>").as("e"))
-          val cents = ivfCentroids(emb)
-          cents.write.mode("overwrite")
-            .option("path", loc.resolve("cents").toString)
-            .saveAsTable(centTbl)
-          val assigned = ivfAssign(emb, cents)
-          assigned.write.mode("overwrite")
-            .option("path", loc.resolve("lists").toString)
-            .bucketBy(IvfIndexBuckets, "cent_id").sortBy("cent_id")
-            .saveAsTable(listTbl)
-          assigned.select("cent_id", "vec_id")
-            .join(ProductQuantization.pqCodes(emb.select("vec_id", "e")), "vec_id")
-            .select("cent_id", "vec_id", "codes")
-            .write.mode("overwrite")
-            .option("path", loc.resolve("codes").toString)
-            .bucketBy(IvfIndexBuckets, "cent_id").sortBy("cent_id")
-            .saveAsTable(codeTbl)
-          DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    (centTbl, listTbl)
+    val ix = DurableIndex.open(s, d, IvfIndex)
+    (ix.table("ivf_cents3"), ix.table("ivf_lists3"))
+  }
+
+  val IvfIndex: DurableIndex.Spec = DurableIndex.Spec("ivf3", "embeddings.parquet", Seq(
+      DurableIndex.Table("ivf_cents3", "cents", "cent_id BIGINT, ce ARRAY<DOUBLE>"),
+      DurableIndex.Table("ivf_lists3", "lists",
+        "cent_id BIGINT, vec_id BIGINT, label INT, e ARRAY<DOUBLE>",
+        Some("cent_id" -> IvfIndexBuckets)),
+      DurableIndex.Table("ivf_codes3", "codes",
+        "cent_id BIGINT, vec_id BIGINT, codes ARRAY<INT>",
+        Some("cent_id" -> IvfIndexBuckets))),
+    Some("ivf")) { (s, d, ix) =>
+    val emb = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label"),
+        col("embedding").cast("array<double>").as("e"))
+    val cents = ivfCentroids(emb)
+    ix.write("ivf_cents3", cents)
+    val assigned = ivfAssign(emb, cents)
+    ix.write("ivf_lists3", assigned)
+    ix.write("ivf_codes3", assigned.select("cent_id", "vec_id")
+      .join(ProductQuantization.pqCodes(emb.select("vec_id", "e")), "vec_id"))
   }
 
   /** Name of the index's PQ-code table (the q81 probe target). */
   private[sim] def ivfCodesTable(s: SparkSession, d: String): String =
-    s"ivf_codes3_${graft.ops.DurableIndex.snapshotTag(d, "embeddings.parquet")}"
+    DurableIndex.locate(d, IvfIndex).table("ivf_codes3")
 
   /** q78 — IVF top-k against the PERSISTED index: same output (and
     * oracle) as [[ivfTopK]], but the codebook and lists are read from
@@ -1274,30 +1229,24 @@ object SimilarityQueries {
     * `newVecs` is (vec_id, label, e) — the label lands in the lists
     * like every indexed row's (filtered-ANN metadata). */
   def appendToIvfIndex(s: SparkSession, d: String, newVecs: DataFrame): Unit = {
-    val (centTbl, listTbl) = ivfIndex(s, d)
+    val ix = DurableIndex.open(s, d, IvfIndex)
     val assigned = ivfAssign(newVecs.select("vec_id", "label", "e"),
-      s.table(centTbl))
-    assigned.write.mode("append")
-      .bucketBy(IvfIndexBuckets, "cent_id").sortBy("cent_id")
-      .saveAsTable(listTbl)
+      s.table(ix.table("ivf_cents3")))
+    ix.append("ivf_lists3", assigned)
     // the PQ leg grows in lockstep, encoded against the index's FROZEN
     // PQ codebook (derived from the snapshot file, not the new batch)
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    assigned.select("cent_id", "vec_id")
+    ix.append("ivf_codes3", assigned.select("cent_id", "vec_id")
       .join(ProductQuantization.pqEncode(newVecs.select("vec_id", "e"),
-        ProductQuantization.pqCodebook(emb)), "vec_id")
-      .select("cent_id", "vec_id", "codes")
-      .write.mode("append")
-      .bucketBy(IvfIndexBuckets, "cent_id").sortBy("cent_id")
-      .saveAsTable(ivfCodesTable(s, d))
+        ProductQuantization.pqCodebook(emb)), "vec_id"))
     // the write refreshes the relation cache of the session it ran in —
     // which, when `newVecs` comes from a foreachBatch Dataset, is the
     // stream's CLONED session, not `s`. Refresh `s` explicitly so the
     // contract is "after this returns, s sees the appended index"
     // regardless of which session the input rows were bound to.
-    s.catalog.refreshTable(listTbl)
-    s.catalog.refreshTable(ivfCodesTable(s, d))
+    s.catalog.refreshTable(ix.table("ivf_lists3"))
+    s.catalog.refreshTable(ix.table("ivf_codes3"))
   }
 
   /** Index MAINTENANCE for the ANN side: merge the per-append files of
@@ -1308,18 +1257,8 @@ object SimilarityQueries {
     * nlist rows of plain parquet and never grows on append, so it is
     * left alone. Search results and the exchange-free list scan are
     * unchanged (SimilaritySpec asserts both). */
-  def compactIvfIndex(s: SparkSession, d: String): Unit = {
-    import graft.ops.DurableIndex
-    val tag = DurableIndex.snapshotTag(d, "embeddings.parquet")
-    val (_, listTbl) = ivfIndex(s, d)
-    val loc = DurableIndex.root.resolve(s"ivf3-$tag")
-    DurableIndex.locked(tag) {
-      DurableIndex.compactBucketedTable(
-        s, listTbl, loc.resolve("lists"), "cent_id", IvfIndexBuckets)
-      DurableIndex.compactBucketedTable(
-        s, ivfCodesTable(s, d), loc.resolve("codes"), "cent_id", IvfIndexBuckets)
-    }
-  }
+  def compactIvfIndex(s: SparkSession, d: String): Unit =
+    DurableIndex.compact(s, d, IvfIndex, "ivf_lists3", "ivf_codes3")
 
   /** q174's split: every AppendMod-th vector is the "new batch"; the
     * rest are the already-indexed base corpus. */
@@ -1339,44 +1278,24 @@ object SimilarityQueries {
     * batch costs ∝ batch (one broadcast-assign of the new vectors +
     * a bucketed file append), never a base re-scan or re-train. */
   def ivfAppendedIndex(s: SparkSession, d: String): (String, String) = {
-    import graft.ops.DurableIndex
-    val tag = DurableIndex.snapshotTag(d, "embeddings.parquet")
-    val centTbl = s"ivfapp_cents_$tag"
-    val listTbl = s"ivfapp_lists_$tag"
-    DurableIndex.locked(s"ivfapp-$tag") {
-      if (!s.catalog.tableExists(centTbl) || !s.catalog.tableExists(listTbl)) {
-        val loc = DurableIndex.root.resolve(s"ivfapp-$tag")
-        if (DurableIndex.complete(loc)) {
-          s.sql(s"CREATE TABLE IF NOT EXISTS $centTbl " +
-            "(cent_id BIGINT, ce ARRAY<DOUBLE>) USING PARQUET " +
-            s"LOCATION '${loc.resolve("cents")}'")
-          s.sql(s"CREATE TABLE IF NOT EXISTS $listTbl " +
-            "(cent_id BIGINT, vec_id BIGINT, e ARRAY<DOUBLE>) USING PARQUET " +
-            s"CLUSTERED BY (cent_id) SORTED BY (cent_id) " +
-            s"INTO $IvfIndexBuckets BUCKETS LOCATION '${loc.resolve("lists")}'")
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          val emb = Tables.embeddings(s, d)
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-          val base = emb.filter(col("vec_id") % AppendMod =!= 0)
-          val cents = ivfCentroids(base)
-          cents.write.mode("overwrite")
-            .option("path", loc.resolve("cents").toString)
-            .saveAsTable(centTbl)
-          ivfAssign(base, cents).write.mode("overwrite")
-            .option("path", loc.resolve("lists").toString)
-            .bucketBy(IvfIndexBuckets, "cent_id").sortBy("cent_id")
-            .saveAsTable(listTbl)
-          // the append: delta against the frozen codebook, same buckets
-          ivfAssign(emb.filter(col("vec_id") % AppendMod === 0), s.table(centTbl))
-            .write.mode("append")
-            .bucketBy(IvfIndexBuckets, "cent_id").sortBy("cent_id")
-            .saveAsTable(listTbl)
-          DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    (centTbl, listTbl)
+    val ix = DurableIndex.open(s, d, IvfAppended)
+    (ix.table("ivfapp_cents"), ix.table("ivfapp_lists"))
+  }
+
+  val IvfAppended: DurableIndex.Spec = DurableIndex.Spec("ivfapp", "embeddings.parquet", Seq(
+      DurableIndex.Table("ivfapp_cents", "cents", "cent_id BIGINT, ce ARRAY<DOUBLE>"),
+      DurableIndex.Table("ivfapp_lists", "lists", "cent_id BIGINT, vec_id BIGINT, e ARRAY<DOUBLE>",
+        Some("cent_id" -> IvfIndexBuckets))),
+    Some("ivf_append")) { (s, d, ix) =>
+    val emb = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+    val base = emb.filter(col("vec_id") % AppendMod =!= 0)
+    val cents = ivfCentroids(base)
+    ix.write("ivfapp_cents", cents)
+    ix.write("ivfapp_lists", ivfAssign(base, cents))
+    // the append: delta against the frozen codebook, same buckets
+    ix.append("ivfapp_lists",
+      ivfAssign(emb.filter(col("vec_id") % AppendMod === 0), s.table(ix.table("ivfapp_cents"))))
   }
 
   /** q174 — IVF top-k over the base+appended PERSISTED index:
@@ -1779,15 +1698,10 @@ object SimilarityQueries {
     * candidates (q44/q78) like the rest of the neighbor family; the
     * re-rank cost is k·m sims per query regardless of corpus size. */
   def mmrRerank(s: SparkSession, d: String, k: Int = MmrK,
-                m: Int = MmrPool,
-                queryCap: Long = Long.MaxValue): DataFrame = {
-    // queryCap bounds the query set for the workload-constant scaling
-    // probes (tools.VariantBench `mmr_qconst`); the registered q143
-    // leaves it unbounded, |Q| ∝ N like the rest of the ANN family
+                m: Int = MmrPool): DataFrame = {
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    val queries = emb.filter(col("vec_id") % 100 === 0 &&
-        col("vec_id") < queryCap)
+    val queries = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("e").as("qe"))
     val cand = emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("qid"))

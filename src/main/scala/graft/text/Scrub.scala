@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Tables
+import graft.ops.{DurableIndex, Tables}
 
 /** Corpus-cleaning operators for the training-data pipeline: PII
   * redaction and intra-document repetition metrics (the Gopher-style
@@ -855,9 +855,9 @@ object Scrub {
     * differ by ≤ N, so `span_end = max(start) + N − 1` without ever
     * exploding the N-fold per-position coverage (and without its
     * distinct's extra exchange). The occurrence window was MEASURED
-    * against the dup-aggregate + join-back alternative (VariantBench
-    * span_window / span_checkpoint / span_rescan, sf0.1: 1.09 vs 1.42
-    * vs 1.98 s): agg+join consumes the gram frame twice — Catalyst
+    * against the dup-aggregate + join-back alternative (PERF_NOTES.md
+    * "q123 substring spans": span_window / span_checkpoint /
+    * span_rescan, sf0.1: 1.09 vs 1.42 vs 1.98 s): agg+join consumes the gram frame twice — Catalyst
     * re-runs the tokenize+md5 lineage per consumer (2 parquet scans),
     * and checkpointing the frame still pays materialization + TWO
     * gh exchanges (aggregate + probe); the window pays ONE gh
@@ -907,7 +907,7 @@ object Scrub {
     * the batch having to match any whole doc or chunk.
     *
     * Same one-scan/one-gh-exchange shape as q123 (measured there —
-    * VariantBench span_*): the occurrence window just counts CORPUS
+    * PERF_NOTES.md "q123 substring spans"): the occurrence window just counts CORPUS
     * occurrences only (`sum(corp)`), and the island stage keeps
     * batch-side starts with ≥ 1. A batch gram repeated only WITHIN
     * the batch does not mark (admission dedup of the batch against
@@ -938,33 +938,17 @@ object Scrub {
     * ONE 32-byte string per distinct corpus gram — no doc ids, no
     * positions — and a nightly crawl pays gram-extraction + a
     * semi-join ∝ the BATCH, never re-touching the corpus. */
-  def spanGramIndex(s: SparkSession, d: String): String = {
-    import graft.dedup.DedupQueries.{IncBatchMod, IncBatchRem, IndexBuckets}
-    val tag = graft.ops.DurableIndex.snapshotTag(d, "documents.parquet")
-    val tbl = s"span_corpus_grams_$tag"
-    graft.ops.DurableIndex.locked(s"spangrams-$tag") {
-      if (!s.catalog.tableExists(tbl)) {
-        val loc = graft.ops.DurableIndex.root.resolve(s"spangrams-$tag")
-        if (graft.ops.DurableIndex.complete(loc)) {
-          // reuse: redeclare the external bucketed table over the files
-          s.sql(s"CREATE TABLE IF NOT EXISTS $tbl (gh STRING) USING PARQUET " +
-            s"CLUSTERED BY (gh) SORTED BY (gh) INTO $IndexBuckets BUCKETS " +
-            s"LOCATION '${loc.resolve("grams")}'")
-          ()
-        } else {
-          java.nio.file.Files.createDirectories(loc)
-          val corpus = Tables.documents(s, d)
-            .filter(col("doc_id") % IncBatchMod =!= IncBatchRem)
-          gramHashRows(corpus, SpanGramN).select("gh").distinct()
-            .write.mode("overwrite")
-            .option("path", loc.resolve("grams").toString)
-            .bucketBy(IndexBuckets, "gh").sortBy("gh")
-            .saveAsTable(tbl)
-          graft.ops.DurableIndex.markComplete(loc)
-        }
-      }
-    }
-    tbl
+  def spanGramIndex(s: SparkSession, d: String): String =
+    DurableIndex.open(s, d, SpanGrams).table("span_corpus_grams")
+
+  val SpanGrams: DurableIndex.Spec = DurableIndex.Spec("spangrams", "documents.parquet",
+    Seq(DurableIndex.Table("span_corpus_grams", "grams", "gh STRING",
+      Some("gh" -> graft.dedup.DedupQueries.IndexBuckets))),
+    Some("span_grams")) { (s, d, ix) =>
+    import graft.dedup.DedupQueries.{IncBatchMod, IncBatchRem}
+    val corpus = Tables.documents(s, d)
+      .filter(col("doc_id") % IncBatchMod =!= IncBatchRem)
+    ix.write("span_corpus_grams", gramHashRows(corpus, SpanGramN).select("gh").distinct())
   }
 
   /** q130 — q128 against the PERSISTED gram index: the batch's grams

@@ -2,26 +2,22 @@ package graft.tools
 
 import graft.{Sessions, SparkEntry}
 
-/** Dev tool: print the executed plan of the named registry queries —
-  * the `.explain("formatted")` loop the round process requires, kept
-  * runnable (`sbt "runMain graft.tools.PlanDump q152_merge_upsert"`)
-  * so plan iteration is one command, not an ad-hoc console session. */
+/** Dev tool: print the formatted physical plan (`.explain("formatted")`:
+  * numbered operators plus per-node details — PushedFilters,
+  * ReadSchema, join build side) of the named registry queries, or of
+  * every query when none is named — the per-operator audit loop
+  * (pushdown reached the scan? codegen spans wide? shuffles only where
+  * semantics demand?) and the form the plans/ files hold.
+  *
+  * Usage: `SPARK_GRAFT_SF_DIR=<sfDir> sbt "runMain graft.tools.PlanDump [query...]"` */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    // SPARK_GRAFT_PLAN_FORMATTED=1 switches to `.explain("formatted")`
-    // output (numbered operators + per-node details: PushedFilters,
-    // ReadSchema, join build side) — the form the plans/ evidence files
-    // require; default stays the compact executedPlan tree.
-    val formatted = sys.env.get("SPARK_GRAFT_PLAN_FORMATTED").contains("1")
-    args.foreach { q =>
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { q =>
       println(s"==== $q")
-      val qe = SparkEntry.queries(q)(spark, d).queryExecution
-      if (formatted)
-        println(qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      else
-        println(qe.executedPlan.toString)
+      SparkEntry.queries(q)(spark, d).explain("formatted")
     }
     spark.stop()
   }

@@ -243,9 +243,9 @@ class DedupSpec extends AnyFunSuite {
   test("a fresh session probes the persisted index without rebuilding it") {
     val spark = SparkSpec.spark
     // build (or find) the durable index and snapshot its files
-    val (hashTbl, _) = DedupQueries.corpusIndex(spark, sfDir)
-    val tag = hashTbl.stripPrefix("inc_corpus_hashes_")
-    val loc = DedupQueries.indexRoot.resolve(s"dedup-$tag")
+    val ix = graft.ops.DurableIndex.open(spark, sfDir, DedupQueries.CorpusIndex)
+    val hashTbl = ix.table("inc_corpus_hashes")
+    val loc = ix.loc
     def fileState(): Map[String, Long] = {
       val st = java.nio.file.Files.walk(loc)
       try {
@@ -264,7 +264,7 @@ class DedupSpec extends AnyFunSuite {
     // it), so simulate a fresh session's empty catalog by dropping the
     // EXTERNAL tables — entries go, files and completion marker stay.
     spark.sql(s"DROP TABLE $hashTbl")
-    spark.sql(s"DROP TABLE inc_corpus_bands_$tag")
+    spark.sql(s"DROP TABLE ${ix.table("inc_corpus_bands")}")
     assert(java.nio.file.Files.exists(
       loc.resolve("hashes")) && fileState() === before,
       "DROP TABLE on the external index must not touch its files")
@@ -322,9 +322,7 @@ class DedupSpec extends AnyFunSuite {
       (i, (1 to 12).map(j => s"c${i}_$j").mkString(" "))
     }
     docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val (hashTbl, _) = DedupQueries.corpusIndex(spark, dir)
-    val tag = hashTbl.stripPrefix("inc_corpus_hashes_")
-    val loc = DedupQueries.indexRoot.resolve(s"dedup-$tag")
+    val loc = graft.ops.DurableIndex.open(spark, dir, DedupQueries.CorpusIndex).loc
     // three nightly appends — each lands its own file set per table
     val all = graft.ops.Tables.documents(spark, dir).select("doc_id", "text")
     for (r <- 1L to 3L)

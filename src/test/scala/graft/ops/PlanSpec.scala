@@ -263,15 +263,7 @@ class PlanSpec extends AnyFunSuite {
     // order or leftover /tmp state. A per-cluster driver loop would
     // cost ≥ 3·nlist ≈ 42 jobs even at sf0.001's 14 centroids; 30 is
     // the tripwire between the two shapes.
-    val tag = graft.ops.DurableIndex.snapshotTag(sfDir, "embeddings.parquet")
-    spark.sql(
-      s"DROP TABLE IF EXISTS kmeans_centroids_${graft.sim.KMeans.Iters}_$tag")
-    val loc = graft.ops.DurableIndex.root
-      .resolve(s"kmeans${graft.sim.KMeans.Iters}-$tag")
-    if (java.nio.file.Files.exists(loc))
-      java.nio.file.Files.walk(loc)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
+    graft.ops.DurableIndex.drop(spark, sfDir, graft.sim.KMeans.Centroids)
     val jobs = countJobs {
       graft.SparkEntry.queries("q110_kmeans_assign")(spark, sfDir).collect()
     }

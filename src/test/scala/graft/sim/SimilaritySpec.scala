@@ -318,8 +318,7 @@ class SimilaritySpec extends AnyFunSuite {
       SimilarityQueries.appendToIvfIndex(spark, dir,
         toD(extra.toDF("vec_id", "embedding", "label")))
     }
-    val tag = graft.ops.DurableIndex.snapshotTag(dir, "embeddings.parquet")
-    val loc = graft.ops.DurableIndex.root.resolve(s"ivf3-$tag")
+    val loc = graft.ops.DurableIndex.locate(dir, SimilarityQueries.IvfIndex).loc
     def files(name: String) =
       graft.ops.DurableIndex.dataFiles(loc.resolve(name)).size
     def rows(df: org.apache.spark.sql.DataFrame) =

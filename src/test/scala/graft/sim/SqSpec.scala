@@ -2,7 +2,8 @@ package graft.sim
 
 import scala.util.Random
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -12,6 +13,24 @@ import graft.SparkSpec
   * planted near-copy. */
 class SqSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.01"
+
+  /** Exact per-anchor top-k through the bounded
+    * [[graft.ops.TopKAggregator.TopKByScore]] buffer over an explicit
+    * (vec_id, e) frame — the registered q20 body — as the recall
+    * reference. */
+  private def topKAggFrom(embd: DataFrame, k: Int = 5): DataFrame = {
+    val queries = embd.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("qid"), col("e").as("qe"))
+    embd.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("cos", SimilarityQueries.cosineExpr("qe", "e"))
+      .groupBy("qid")
+      .agg(graft.ops.TopKAggregator.topKByScore(k)(
+        round(col("cos"), 6), col("vec_id"), col("cos"), lit(0)).as("top"))
+      .select(col("qid"), posexplode(col("top")).as(Seq("rk", "e")))
+      .select(col("qid"), col("e._2").as("neighbor_id"),
+        (col("rk") + 1).as("rank"), round(col("e._3"), 4).as("cos"))
+  }
 
   private def embOf(spark: org.apache.spark.sql.SparkSession) =
     graft.ops.Tables.embeddings(spark, sfDir)
@@ -83,7 +102,7 @@ class SqSpec extends AnyFunSuite {
     assert(sq((200L, 1)) === 259L, "the near-copy must win SQ8 rank 1")
     // recall@5 of SQ8 vs exact on the same frame (reported, not gated —
     // SQ8 on unit-range data is near-lossless, expect ≥ 0.9)
-    val exact = graft.tools.VariantBench.topKAggFrom(emb)
+    val exact = topKAggFrom(emb)
     val sqSets = sq.toSeq.groupBy(_._1._1).view.mapValues(_.map(_._2).toSet).toMap
     val exSets = exact.collect().map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
