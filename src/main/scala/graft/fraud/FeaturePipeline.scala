@@ -34,11 +34,16 @@ object FeaturePipeline {
   def dateOrigin(df: DataFrame): Date =
     df.agg(min("Date")).head().getDate(0)
 
-  /** The origin enters the plan as a [[PlanConstant]], not a literal: it
-    * changes with every scored upload, and a literal would make each
-    * upload's generated code new. */
-  private def daysSince(origin: Date): Column =
-    datediff(col("Date"), PlanConstant(Option(origin).map(_.toLocalDate).orNull)).cast("double")
+  /** A collected origin as a [[PlanConstant]], not a literal: it changes
+    * with every scored upload, and a literal would make each upload's
+    * generated code new. */
+  private[fraud] def originConstant(origin: Date): Column =
+    PlanConstant(Option(origin).map(_.toLocalDate).orNull)
+
+  /** Days from `origin` — an [[originConstant]], or `min(Date)` over a
+    * whole-input window so that no action collects it first. */
+  private def daysSince(origin: Column): Column =
+    datediff(col("Date"), origin).cast("double")
 
   private def guardStd(s: Double): Double = if (s == 0.0 || s.isNaN) 1.0 else s
 
@@ -46,7 +51,7 @@ object FeaturePipeline {
     val cats = df.select("SubsidyType").distinct().collect()
       .map(_.getString(0)).sorted.toSeq
     val origin = dateOrigin(df)
-    val days = daysSince(origin)
+    val days = daysSince(originConstant(origin))
     val r: Row = df.agg(
       avg(col("ClaimAmount")), stddev_pop(col("ClaimAmount")),
       avg(days), stddev_pop(days)).head()
@@ -60,8 +65,12 @@ object FeaturePipeline {
     * boxing. Without `fixedOrigin` this runs one action for the
     * dataset's origin; a caller that already has it passes it here. */
   def transform(df: DataFrame, p: FeatureParams,
-                fixedOrigin: Option[Date] = None): DataFrame = {
-    val days = daysSince(fixedOrigin.getOrElse(dateOrigin(df)))
+                fixedOrigin: Option[Date] = None): DataFrame =
+    transformAt(df, p, originConstant(fixedOrigin.getOrElse(dateOrigin(df))))
+
+  /** [[transform]] against an origin column; lazy. */
+  private[fraud] def transformAt(df: DataFrame, p: FeatureParams, origin: Column): DataFrame = {
+    val days = daysSince(origin)
     val amountZ = (col("ClaimAmount") - lit(p.amountMean)) / lit(p.amountStd)
     val daysZ = (days - lit(p.daysMean)) / lit(p.daysStd)
     val oneHot: Seq[Column] =

@@ -1,23 +1,26 @@
 package graft.fraud
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ml.{MLP, Trainer}
 
 /** The hybrid rule+ML pipeline end-to-end (reference: scripts/
-  * run_pipeline.py:11-101) as ONE lazy Spark plan with two tiny scalar
-  * actions — p99 and date origin fused into one aggregate over the input,
-  * then the error mean+2σ — and a final write.
+  * run_pipeline.py:11-101) as ONE lazy Spark plan. In parity mode (the
+  * upload path) its only action is the caller's write: p99, the date
+  * origin and the error mean+2σ are whole-upload window columns. At
+  * scale two tiny scalar actions collect them first — p99 and the origin
+  * fused into one aggregate over the input, then the error mean+2σ.
   *
   * Scoring a small upload is mostly fixed cost per Spark job and per
   * compiled class, so [[scoreWithColumns]] keeps both down:
-  *  - the three per-upload values enter the plan as [[PlanConstant]]s,
-  *    not literals, so every upload reuses the classes codegen compiled
-  *    for the previous one (and their JIT-compiled code);
-  *  - in parity mode the input is parsed once (a lazy local checkpoint,
-  *    filled by the first aggregate) and input order is restored by one
-  *    shuffle to a single partition plus a partition-local sort.
+  *  - in parity mode the input is parsed once and gathered by one
+  *    shuffle to a single partition, where every window runs in one
+  *    task and a partition-local sort restores input order;
+  *  - no per-upload value is a literal in the plan (window columns, or
+  *    [[PlanConstant]]s at scale), so every upload reuses the classes
+  *    codegen compiled for the previous one (and their JIT-compiled code).
   *
   * Deliberate divergence from the reference (documented, SURVEY §2.7):
   *  - ReconstructionError stays in the row lineage, so it is attached to
@@ -93,47 +96,51 @@ object FraudPipeline {
     * gives an output without rows.
     *
     * `preserveInputOrder` is golden/parity mode, for small files: the
-    * parsed input is kept once in executor storage (released by Spark's
-    * context cleaner once the result is unreachable) instead of being
-    * re-read by each of the three passes, and the output is gathered
-    * into one partition. At scale pass `false`: each pass then re-reads
-    * the input, since keeping a 100 TB table spills and leaks executor
-    * storage across invocations (r1 advice), and the output stays
-    * partitioned. */
+    * three per-upload values are columns over one whole-input window, so
+    * the plan has one shuffle (to a single partition, where the rule
+    * windows and the threshold also run), one pass of the autoencoder
+    * UDF, no action before the caller's, and a partition-local sort to
+    * input order. At scale pass `false`: the whole input in one task does
+    * not scale, so p99 and the origin are collected by one aggregate and
+    * the threshold by a second pass that recomputes the scoring plan
+    * (keeping a 100 TB table spills and leaks executor storage across
+    * invocations, r1 advice); they enter the plan as [[PlanConstant]]s
+    * and the output stays partitioned. */
   def scoreWithColumns(spark: SparkSession, claims: DataFrame, model: FraudModel,
             passthrough: Seq[String],
             exactQuantile: Boolean = true,
             preserveInputOrder: Boolean = true): DataFrame = {
-    val rowed = RuleEngine.withRowId(claims)
-    val input = if (preserveInputOrder) rowed.localCheckpoint(eager = false) else rowed
-    // p99 and the date origin depend only on the input: one action for both
-    val stats = input.agg(RuleEngine.p99Column(exactQuantile), min("Date")).head()
-    val ruled = RuleEngine.withRuleTagsAt(input, RuleEngine.doubleOrNaN(stats, 0))
-    val feat = FeaturePipeline.transform(ruled, model.params, fixedOrigin = Some(stats.getDate(1)))
-    // The threshold pass (M7) recomputes the linear scoring plan rather
-    // than caching it; the rule windows are pruned from it, since the
-    // error does not depend on the tags.
+    val input = RuleEngine.withRowId(claims)
+    val upload = Window.partitionBy()
+    val (p99, origin) =
+      if (preserveInputOrder) (RuleEngine.p99Column(exactQuantile).over(upload), min("Date").over(upload))
+      else {
+        // p99 and the date origin depend only on the input: one action for both
+        val stats = input.agg(RuleEngine.p99Column(exactQuantile), min("Date")).head()
+        (PlanConstant(RuleEngine.doubleOrNaN(stats, 0)), FeaturePipeline.originConstant(stats.getDate(1)))
+      }
+    val ruled = RuleEngine.withRuleTagsAt(input, p99)
+    val feat = FeaturePipeline.transformAt(ruled, model.params, origin)
     val scored = withReconstructionError(spark, feat, model.net)
-    val thr = mlThreshold(scored)
+    val err = col("ReconstructionError")
+    // M7: mean + 2σ (ddof=0) of the error, null without rows, over the
+    // upload window or collected. The scale path's threshold pass prunes
+    // the rule windows, since the error does not depend on the tags.
+    def meanPlus2Sd(scope: Column => Column) = scope(avg(err)) + lit(2.0) * scope(stddev_pop(err))
+    val thr =
+      if (preserveInputOrder) meanPlus2Sd(_.over(upload))
+      else PlanConstant(RuleEngine.doubleOrNaN(scored.agg(meanPlus2Sd(identity)).head(), 0))
     val combined = scored
-      .withColumn("MLFraud",
-        when(col("ReconstructionError") > PlanConstant(thr), "Suspicious").otherwise("Normal"))
+      .withColumn("MLFraud", when(err > thr, "Suspicious").otherwise("Normal"))
       .withColumn("FraudType", combineFraudType)
-    // pandas-index order parity: one partition sorted by row id, without
-    // the sampling job and range shuffle of a global sort
-    val ordered =
-      if (preserveInputOrder) combined.repartition(1).sortWithinPartitions("_row_id") else combined
+    // pandas-index order parity: the whole-input window already gathered
+    // the rows into one partition, so a partition-local sort restores it
+    val ordered = if (preserveInputOrder) combined.sortWithinPartitions("_row_id") else combined
     val outCols = Seq(
       col("Name"), col("Aadhaar"), col("ClaimAmount"), col("SubsidyType"),
       date_format(col("Date"), "yyyy-MM-dd").as("Date"),
       col("ReconstructionError"), col("FraudType")) ++ passthrough.map(col)
     ordered.select(outCols: _*)
-  }
-
-  /** M7: mean + 2σ (ddof=0) of `ReconstructionError`; NaN without rows. */
-  private def mlThreshold(scored: DataFrame): Double = {
-    val r = scored.agg(avg("ReconstructionError"), stddev_pop("ReconstructionError")).head()
-    RuleEngine.doubleOrNaN(r, 0) + 2.0 * RuleEngine.doubleOrNaN(r, 1)
   }
 
   /** train-then-score on the same table — the reference's self-scoring

@@ -5,8 +5,11 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
-/** A value computed per upload (p99, date origin, ML threshold) as a
-  * column that stays out of the generated code.
+/** A value collected per input (p99, date origin, ML threshold on the
+  * scale path of `FraudPipeline.scoreWithColumns`; p99 in
+  * `RuleEngine.withRuleTags`; the origin in `FeaturePipeline`) as a
+  * column that stays out of the generated code. The parity upload path
+  * collects none: it takes the three as whole-upload window columns.
   *
   * `lit(v)` is a literal that whole-stage codegen inlines into the Java
   * source, and Spark caches compiled classes by that source, so every

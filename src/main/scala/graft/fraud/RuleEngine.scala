@@ -40,7 +40,7 @@ object RuleEngine {
     else df.withColumn("_row_id", monotonically_increasing_id())
 
   /** p99 of `ClaimAmount` as an aggregate column, so callers can fuse it
-    * with other scalars over the same input. */
+    * with other scalars over the same input or take it over a window. */
   private[fraud] def p99Column(exact: Boolean = true): Column =
     expr(if (exact) "percentile(ClaimAmount, 0.99)"
          else "approx_percentile(ClaimAmount, 0.99, 10000)")
@@ -56,11 +56,12 @@ object RuleEngine {
   /** Adds `RuleFraud` (and keeps `_row_id`); runs one action for p99. */
   def withRuleTags(df0: DataFrame, exactQuantile: Boolean = true): DataFrame = {
     val df = withRowId(df0)
-    withRuleTagsAt(df, p99Amount(df, exactQuantile))
+    withRuleTagsAt(df, PlanConstant(p99Amount(df, exactQuantile)))
   }
 
-  /** [[withRuleTags]] against a p99 the caller already has; lazy. */
-  private[fraud] def withRuleTagsAt(df0: DataFrame, p99: Double): DataFrame = {
+  /** [[withRuleTags]] against a p99 column: a [[PlanConstant]] the caller
+    * already collected, or [[p99Column]] over a whole-input window; lazy. */
+  private[fraud] def withRuleTagsAt(df0: DataFrame, p99: Column): DataFrame = {
     val df = withRowId(df0)
     val byAadhaar = Window.partitionBy("Aadhaar").orderBy("Date", "_row_id")
     val wholeAadhaar = byAadhaar.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -71,7 +72,7 @@ object RuleEngine {
     val tags = concat(
       when(hasAadhaar && manyValues("Name", wholeAadhaar), "DuplicateAadhaar;").otherwise(""),
       when(col("Name").isNotNull && manyValues("Aadhaar", byName), "MultiAadhaar;").otherwise(""),
-      when(col("ClaimAmount") > PlanConstant(p99), "HighClaimAmount;").otherwise(""),
+      when(col("ClaimAmount") > p99, "HighClaimAmount;").otherwise(""),
       when(hasAadhaar && daysDiff <= 7, "FrequentClaims;").otherwise(""))
     // tags go in a column of their own before the empty check: used twice
     // in one expression, each window function would be computed twice

@@ -1,13 +1,18 @@
 package graft.fraud
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDate
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.{Alias, ScalaUDF}
+import org.apache.spark.sql.execution.{ProjectExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,8 +23,9 @@ import graft.ml.Trainer
 /** `FraudPipeline.score` end to end on claims CSVs this suite writes
   * itself: rule tags against the driver-side reference, input order, the
   * ML threshold, per-upload constants kept out of the generated code,
-  * the threshold pass's plan, and the empty upload. */
-class FraudPipelineSpec extends AnyFunSuite {
+  * the one query an upload runs, parity against scale mode, a multi-file
+  * upload's order, and the empty upload. */
+class FraudPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val header = "Name,Aadhaar,ClaimAmount,SubsidyType,Date"
   private val subsidies = Seq("Education", "Farming", "Housing", "LPG")
@@ -94,28 +100,73 @@ class FraudPipelineSpec extends AnyFunSuite {
     assert(code.head === code(1))
   }
 
-  test("the threshold pass runs no rule window and no shuffle by key") {
+  test("an upload is one query: one shuffle, one UDF pass, each window once") {
     val spark = SparkSpec.spark
+    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
     val plans = new ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    def isSentinel(qe: QueryExecution) = qe.analyzed.toString.contains(sentinel)
     spark.listenerManager.register(listener)
-    val scored = try {
-      val df = score(writeCsv("plan.csv", uploadA))
-      df.collect()
-      def threshold = plans.asScala.find(_.analyzed.toString.contains("stddev_pop"))
-      val deadline = System.nanoTime() + 30e9.toLong // listener events arrive asynchronously
-      while (threshold.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      val plan = threshold.getOrElse(fail("no threshold aggregation ran")).executedPlan.toString
-      assert(!plan.contains("Window"), plan)
-      assert(!plan.contains("hashpartitioning"), plan)
-      df
+    try {
+      score(writeCsv("plan.csv", uploadA)).collect()
+      spark.range(1).select(lit(sentinel)).collect()
+      // listener events arrive asynchronously but in order: once the
+      // sentinel query is seen, every query of the upload has been
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!plans.asScala.exists(isSentinel) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(plans.asScala.exists(isSentinel), "the sentinel query was not seen")
     } finally spark.listenerManager.unregister(listener)
-    // the same check on the rule pass does see its windows
-    val rules = scored.queryExecution.executedPlan.toString
-    assert(rules.contains("Window") && rules.contains("hashpartitioning"))
+    val queries = plans.asScala.filterNot(isSentinel).map(_.executedPlan).toSeq
+    assert(queries.size === 1, queries.mkString("\n"))
+    val plan = queries.head
+    val shown = plan.toString
+    assert(collect(plan) { case e: Exchange => e }.size === 1, shown)
+    val windows = collect(plan) { case w: WindowExec => w }
+    def partitionedBy(c: String) =
+      windows.count(_.partitionSpec.map(_.references.map(_.name).toSeq) == Seq(Seq(c)))
+    assert(partitionedBy("Aadhaar") === 1, shown)
+    assert(partitionedBy("Name") === 1, shown)
+    assert(windows.count(_.windowExpression.exists(_.toString.contains("percentile"))) === 1, shown)
+    val errors = collect(plan) { case p: ProjectExec => p }.flatMap(_.projectList).count {
+      case Alias(_: ScalaUDF, "ReconstructionError") => true
+      case _ => false
+    }
+    assert(errors === 1, shown)
+  }
+
+  test("parity and scale modes give the same rows") {
+    val spark = SparkSpec.spark
+    val in = RuleEngine.withRowId(Claims.readCsv(spark, writeCsv("modes.csv", uploadA)))
+    def rows(parity: Boolean) = FraudPipeline
+      .scoreWithColumns(spark, in, model, Seq("_row_id"), preserveInputOrder = parity)
+      .collect().toSeq
+    val parity = rows(parity = true)
+    val scale = rows(parity = false).sortBy(_.getLong(7))
+    assert(parity.map(_.getLong(7)) === scale.map(_.getLong(7)))
+    assert(parity.size === uploadA.size)
+    // ReconstructionError and FraudType: the threshold, p99 and origin
+    // agree whether taken over a window or collected
+    assert(parity.map(r => (r.getDouble(5), r.getString(6))) ===
+      scale.map(r => (r.getDouble(5), r.getString(6))))
+  }
+
+  test("an upload read from two part files comes back in row-id order") {
+    val spark = SparkSpec.spark
+    val parts = Files.createDirectories(dir.resolve("parts"))
+    val files = Seq(uploadA.take(150), uploadA.drop(150)).zipWithIndex.map { case (rows, i) =>
+      Files.move(Paths.get(writeCsv(s"part-$i.csv", rows)), parts.resolve(s"part-$i.csv"))
+      rows.map { case (c, _) => (c.name, c.aadhaar, c.date) }
+    }
+    val in = Claims.readCsv(spark, parts.toString)
+    assert(in.rdd.getNumPartitions === 2)
+    val want = RuleEngine.withRowId(in).orderBy("_row_id").collect()
+      .map(r => (r.getString(0), r.getAs[java.lang.Long](1), r.getDate(4).toString)).toSeq
+    assert(want === files.flatten || want === files.reverse.flatten)
+    val out = FraudPipeline.score(spark, in, model).collect()
+    assert(out.map(r => (r.getString(0), r.getAs[java.lang.Long](1), r.getString(4))).toSeq === want)
   }
 
   test("a header-only upload scores to a header-only CSV") {
